@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import cut_lineage, query, t
+from ..substrates import substrate
 from .shingles_sql import (
     EDGES_SQL as _LEAF_EDGES_SQL,
     JACCARD_THRESHOLD,
@@ -95,79 +96,74 @@ def connected_components(
             ).alias("component"),
         )
 
-    converged = False
-    for r in range(max_iter):
-        if r < 2:
-            # plain round: one neighbor-min join; old and new labels live
-            # in the same row, so the changed flag is a free projection
-            neighbor_min = (
-                sym.join(labels, sym.b == labels.id)
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            newc = F.least(
-                F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-            )
-            stepped = labels.join(neighbor_min, "id", "left").select(
-                "id",
-                newc.alias("component"),
-                (newc != F.col("component")).alias("chg"),
-            )
-        else:
-            # accelerated round: two pointer-jumping substeps before the
-            # cut — the per-round cost is one eager lineage-cut job + one
-            # tiny convergence count regardless of plan depth at these
-            # label-frame sizes, so folding two updates into each round
-            # halves the round count for the same job bill
-            old = labels.select("id", F.col("component").alias("old_component"))
-            stepped = (
-                _one_step(_one_step(labels))
-                .join(old, "id")
-                .select(
-                    "id",
-                    "component",
-                    (F.col("component") != F.col("old_component")).alias("chg"),
+    # the returned labels come from an eager cut, so nothing reads sym
+    # after the fixpoint: release it whether it converges or raises
+    try:
+        converged = False
+        for r in range(max_iter):
+            if r < 2:
+                # plain round: one neighbor-min join; old and new labels live
+                # in the same row, so the changed flag is a free projection
+                neighbor_min = (
+                    sym.join(labels, sym.b == labels.id)
+                    .groupBy(F.col("a").alias("id"))
+                    .agg(F.min("component").alias("nbr_component"))
                 )
+                newc = F.least(
+                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
+                )
+                stepped = labels.join(neighbor_min, "id", "left").select(
+                    "id",
+                    newc.alias("component"),
+                    (newc != F.col("component")).alias("chg"),
+                )
+            else:
+                # accelerated round: two pointer-jumping substeps before the
+                # cut — the per-round cost is one eager lineage-cut job + one
+                # tiny convergence count regardless of plan depth at these
+                # label-frame sizes, so folding two updates into each round
+                # halves the round count for the same job bill
+                old = labels.select("id", F.col("component").alias("old_component"))
+                stepped = (
+                    _one_step(_one_step(labels))
+                    .join(old, "id")
+                    .select(
+                        "id",
+                        "component",
+                        (F.col("component") != F.col("old_component")).alias("chg"),
+                    )
+                )
+            new_labels = stepped.transform(cut_lineage)
+            changed = new_labels.filter(F.col("chg")).limit(1).count()
+            labels = new_labels.select("id", "component")
+            if changed == 0:
+                converged = True
+                break
+        if not converged:
+            # silent non-convergence would emit wrong (split) components for
+            # any cluster whose diameter exceeds max_iter — fail loudly instead
+            raise RuntimeError(
+                f"connected_components: not converged after {max_iter} iterations "
+                "(a component's diameter exceeds max_iter); raise max_iter"
             )
-        new_labels = stepped.transform(cut_lineage)
-        changed = new_labels.filter(F.col("chg")).limit(1).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # silent non-convergence would emit wrong (split) components for
-        # any cluster whose diameter exceeds max_iter — fail loudly instead
-        raise RuntimeError(
-            f"connected_components: not converged after {max_iter} iterations "
-            "(a component's diameter exceeds max_iter); raise max_iter"
-        )
-    return labels
+        return labels
+    finally:
+        sym.unpersist()
 
 
 # ---------------------------------------------------------------------------
 # the shared near-dup edge frame (VERDICT r4 #3)
 
-#: session-scoped cache of the near-dup edge frame, keyed by
-#: (spark application id, sf_dir).  SIX registered queries consume the
-#: exact same ``ngram_jaccard_pairs(documents)`` edge set (components,
-#: keep-best, dedup-rate profile, leakage-safe split, BFS, degree
-#: distribution); before r5 each rebuilt the full shingle→inverted-index→
-#: jaccard machinery per query — edge-build-dominated at 10× (BFS 5.7×,
-#: degree-dist 4.7×).  The cache builds it once per session and persists
-#: it, so every later consumer starts from the materialized edge list —
-#: exactly how a deployment treats the edge set (a maintained TABLE, see
-#: :func:`write_edge_table`); the per-session cache is the self-contained
-#: test-harness stand-in, and results are byte-identical either way.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@substrate
 def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(a, b) near-dup edge frame (a < b), built once per session per
     corpus and persisted (MEMORY_AND_DISK — candidate-bounded but
     corpus-shaped; spill, don't OOM).  Construction is lazy: no Spark
     job runs until a consumer's first action, so plan-inspection paths
-    stay job-free."""
+    stay job-free.  Six queries (components, keep-best, dedup-rate
+    profile, leakage-safe split, BFS, degree distribution) share it, as a
+    deployment shares the maintained edge TABLE (:func:`write_edge_table`)."""
     from pyspark import StorageLevel
 
     from .dedup import (
@@ -177,47 +173,30 @@ def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_pairs,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        d = t(spark, sf_dir, "documents")
-        _EDGE_CACHE[key] = (
-            ngram_jaccard_pairs(
-                d,
-                sh=cached_capped_index(spark, sf_dir),
-                grouped=cached_capped_postings(spark, sf_dir),
-                sizes=cached_capped_sizes(spark, sf_dir),
-            )
-            .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    d = t(spark, sf_dir, "documents")
+    return (
+        ngram_jaccard_pairs(
+            d,
+            sh=cached_capped_index(spark, sf_dir),
+            grouped=cached_capped_postings(spark, sf_dir),
+            sizes=cached_capped_sizes(spark, sf_dir),
         )
-    return _EDGE_CACHE[key]
+        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
-#: session-scoped cache of the doc-graph COMPONENT LABELS (r14, guide
-#: §1.2): (id, component) over ALL doc_ids with the session-cached
-#: near-dup edges — the cluster-assignment table of the dedup pipeline.
-#: Six registered consumers (components census, keep-best, per-source
-#: rate, leakage-safe split, source budget, tokens-saved) each re-ran
-#: the full multi-round label-propagation fixpoint per invocation over
-#: the identical persisted edge frame; the labels are a pure function of
-#: it and the fixpoint already returns an eagerly-cut (materialized)
-#: frame, so one run per session serves every consumer.  Reuse changes
-#: no results.
-_DOC_COMPONENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@substrate
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ``connected_components`` labels (id, component)
     over (all doc_ids, :func:`near_dup_edges`).  EAGER on first build
     (the fixpoint runs its convergence jobs), like the edge frame's
-    first materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DOC_COMPONENTS_CACHE:
-        d = t(spark, sf_dir, "documents")
-        _DOC_COMPONENTS_CACHE[key] = connected_components(
-            d.select(F.col("doc_id").alias("id")), near_dup_edges(spark, sf_dir)
-        )
-    return _DOC_COMPONENTS_CACHE[key]
+    first materialization.  The cluster-assignment table of the six
+    component consumers; a pure function of the edge frame."""
+    d = t(spark, sf_dir, "documents")
+    return connected_components(
+        d.select(F.col("doc_id").alias("id")), near_dup_edges(spark, sf_dir)
+    )
 
 
 def symmetrized_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries import cut_lineage, query, spread, t
+from ..substrates import substrate
 from .shingles_sql import (
     CAPPED_SHINGLES_SQL as _CAPPED_SQL,
     JACCARD_THRESHOLD,
@@ -950,64 +951,36 @@ def capped_shingle_index(d: DataFrame) -> DataFrame:
     return all_sh.join(rare, "g")
 
 
-#: session-scoped cache of the capped shingle index, keyed by (spark
-#: application id, sf_dir) — the in-session stand-in for the MAINTAINED
-#: bucketed table (``write_shingle_index``).  Before r5, ten registered
-#: queries each re-ran tokenize→explode→distinct→df per run; at the 10×
-#: probe tier that linear machinery was ~60% of the dedup families'
-#: runtime.  Reuse changes no results: every consumer reads the identical
-#: (doc_id, g) relation.
-_CAPPED_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: session-scoped cache of the UNCAPPED per-doc-distinct hashed shingle
-#: frame (r13) — the substrate one level below the capped index: the
-#: capped build consumes it (df aggregate + stop-shingle join), and
-#: MinHash verification consumes it directly (Jaccard needs the full
-#: per-doc set, cap-free).  Before, each consumer re-ran the
-#: tokenize→shingle→hash pipeline and left its own per-call persist
-#: behind (one new copy per bench rep); one shared persisted frame per
-#: session replaces them.  Same justification as the capped cache: the
-#: maintained-table stand-in, identical relation for every reader.
-_HASHED_SHINGLES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@substrate
 def cached_hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached :func:`hashed_shingle_rows` (default n=3) of the
     corpus's documents table, persisted MEMORY_AND_DISK.  Lazy: no job
-    runs until a consumer's first action."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _HASHED_SHINGLES_CACHE:
-        _HASHED_SHINGLES_CACHE[key] = hashed_shingle_rows(
-            t(spark, sf_dir, "documents")
-        ).persist(_SPILLABLE)
-    return _HASHED_SHINGLES_CACHE[key]
+    runs until a consumer's first action.  The uncapped shingle set under
+    the capped index; MinHash verification reads it directly (Jaccard
+    needs the full per-doc set)."""
+    return hashed_shingle_rows(
+        t(spark, sf_dir, "documents")
+    ).persist(_SPILLABLE)
 
 
+@substrate
 def cached_capped_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached :func:`capped_shingle_index` of the corpus's
     documents table, persisted MEMORY_AND_DISK.  Lazy: no job runs until
-    a consumer's first action."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CAPPED_INDEX_CACHE:
-        # build over the SESSION-CACHED uncapped frame (r13): the df
-        # aggregate + stop-shingle join are the only work left when the
-        # MinHash family already materialized the shingles (or vice
-        # versa) — same relation as capped_shingle_index(documents)
-        all_sh = cached_hashed_shingles(spark, sf_dir)
-        rare = (
-            all_sh.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= MAX_SHINGLE_DF)
-            .select("g")
-        )
-        _CAPPED_INDEX_CACHE[key] = all_sh.join(rare, "g").persist(_SPILLABLE)
-    return _CAPPED_INDEX_CACHE[key]
-
-
-#: session-scoped cache of the per-doc CAPPED-shingle size table
-#: (doc_id, n_g) — the denominator every capped-index pair consumer
-#: (jaccard, containment, threshold sweep) re-aggregated per call (r14).
-_CAPPED_SIZES_CACHE: dict[tuple[str, str], DataFrame] = {}
+    a consumer's first action.  The stand-in for the maintained bucketed
+    table (``write_shingle_index``) the dedup families read."""
+    # build over the SESSION-CACHED uncapped frame (r13): the df
+    # aggregate + stop-shingle join are the only work left when the
+    # MinHash family already materialized the shingles (or vice
+    # versa) — same relation as capped_shingle_index(documents)
+    all_sh = cached_hashed_shingles(spark, sf_dir)
+    rare = (
+        all_sh.groupBy("g")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= MAX_SHINGLE_DF)
+        .select("g")
+    )
+    return all_sh.join(rare, "g").persist(_SPILLABLE)
 
 
 def cached_capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1019,96 +992,68 @@ def cached_capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gw.select("g", "ds")
 
 
+@substrate
 def cached_capped_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (doc_id, n_g) over the capped universe.  Lazy persist."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CAPPED_SIZES_CACHE:
-        _CAPPED_SIZES_CACHE[key] = (
-            cached_capped_index(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_g"))
-            .persist(_SPILLABLE)
-        )
-    return _CAPPED_SIZES_CACHE[key]
+    """Session-cached (doc_id, n_g) over the capped universe.  Lazy
+    persist.  The denominator of every capped-index pair consumer."""
+    return (
+        cached_capped_index(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_g"))
+        .persist(_SPILLABLE)
+    )
 
 
-#: session-scoped caches of the MinHash and SimHash SIGNATURE tables
-#: (r14, guide §1.2/§5) — the per-doc sketch a deployment maintains next
-#: to the corpus (signatures are incrementally computable per document,
-#: which is the whole point of sketch-based dedup).  Each registered
-#: consumer previously re-ran tokenize→shingle→md5 over the full corpus
-#: per invocation to rebuild a table that never changes within a session.
-#: Reuse changes no results: identical relations.
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIMHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@substrate
 def cached_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached :func:`minhash_signatures` of the corpus's documents
-    (raw shingle stream — min-hash is multiset-invariant).  Lazy persist."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MINHASH_SIG_CACHE:
-        _MINHASH_SIG_CACHE[key] = minhash_signatures(
-            raw_shingle_rows(t(spark, sf_dir, "documents"))
-        ).persist(_SPILLABLE)
-    return _MINHASH_SIG_CACHE[key]
+    (raw shingle stream — min-hash is multiset-invariant).  Lazy persist.
+    The per-doc sketch table a deployment maintains next to the corpus."""
+    return minhash_signatures(
+        raw_shingle_rows(t(spark, sf_dir, "documents"))
+    ).persist(_SPILLABLE)
 
 
+@substrate
 def cached_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached :func:`simhash_signatures` of the corpus's documents
-    table.  Lazy persist."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIMHASH_SIG_CACHE:
-        _SIMHASH_SIG_CACHE[key] = simhash_signatures(
-            t(spark, sf_dir, "documents")
-        ).persist(_SPILLABLE)
-    return _SIMHASH_SIG_CACHE[key]
+    table.  Lazy persist.  Maintained like the MinHash table."""
+    return simhash_signatures(
+        t(spark, sf_dir, "documents")
+    ).persist(_SPILLABLE)
 
 
-#: session-scoped cache of the idf-WEIGHTED grouped posting index — one
-#: level above the capped index: (g, sorted posting list ds, squared
-#: fixed-point idf weight w2) plus its per-doc norm table (doc_id, n2)
-#: (r14, guide §1.2/§5).  Both tf-idf cosine detectors (exhaustive +
-#: prefix-filtered, the latter benched) rebuilt this identical frame pair
-#: per invocation — one corpus-scale groupBy Exchange plus a norm
-#: aggregate each — and eagerly localCheckpointed it, leaving a new copy
-#: per call.  One persisted frame pair per session serves both; reuse
-#: changes no results (identical relation, exact integer weights).
-_TFIDF_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@substrate
 def cached_tfidf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session-cached weighted grouped posting index ``(gw, norms)`` —
     ``gw = (g, ds, w2)`` with df-capped sorted posting lists and squared
-    idf weights, ``norms = (doc_id, n2)``.  Lazy persists."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TFIDF_INDEX_CACHE:
-        d = t(spark, sf_dir, "documents")
-        all_sh = cached_capped_index(spark, sf_dir)
-        nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
-        # df is the posting list's own length (size(ds)) — the capped
-        # index admits a shingle iff its GLOBAL df is <= the cap, so the
-        # grouped list is complete and no separate dfreq aggregate is
-        # needed.  Weights are exact fixed-point BIGINT-in-decimal; w²
-        # rides the group so pair dots sum it directly (tf == 1).
-        w = F.floor(
-            F.lit(TFIDF_SCALE) * (F.col("n_docs").cast("double") / F.size("ds"))
-        ).cast("decimal(19,0)")
-        gw = (
-            all_sh.groupBy("g")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-            .crossJoin(F.broadcast(nd))  # 1-row ungrouped aggregate
-            .select("g", "ds", (w * w).alias("w2"))
-            .persist(_SPILLABLE)
-        )
-        norms = (
-            gw.select(F.explode("ds").alias("doc_id"), "w2")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("w2")).alias("n2"))
-            .persist(_SPILLABLE)
-        )
-        _TFIDF_INDEX_CACHE[key] = (gw, norms)
-    return _TFIDF_INDEX_CACHE[key]
+    idf weights, ``norms = (doc_id, n2)``.  Lazy persists.  Both tf-idf
+    cosine detectors read it; the weights are exact integers."""
+    d = t(spark, sf_dir, "documents")
+    all_sh = cached_capped_index(spark, sf_dir)
+    nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    # df is the posting list's own length (size(ds)) — the capped
+    # index admits a shingle iff its GLOBAL df is <= the cap, so the
+    # grouped list is complete and no separate dfreq aggregate is
+    # needed.  Weights are exact fixed-point BIGINT-in-decimal; w²
+    # rides the group so pair dots sum it directly (tf == 1).
+    w = F.floor(
+        F.lit(TFIDF_SCALE) * (F.col("n_docs").cast("double") / F.size("ds"))
+    ).cast("decimal(19,0)")
+    gw = (
+        all_sh.groupBy("g")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .crossJoin(F.broadcast(nd))  # 1-row ungrouped aggregate
+        .select("g", "ds", (w * w).alias("w2"))
+        .persist(_SPILLABLE)
+    )
+    norms = (
+        gw.select(F.explode("ds").alias("doc_id"), "w2")
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("w2")).alias("n2"))
+        .persist(_SPILLABLE)
+    )
+    return (gw, norms)
 
 
 def write_shingle_index(d: DataFrame, table: str, n_buckets: int = 32) -> None:
@@ -1369,8 +1314,9 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the projection instead of a corpus-wide ``.distinct()``, and
     the df-cap + pair counting run through ONE posting-frame Exchange
     (:func:`pairs_from_postings`) instead of the old df-cap join +
-    self-join + persist (plans/r13/dedup_substring_{{before,after}}.txt;
-    3.0 s → 1.0 s warm at sf0.1).  The r10 small-heap guard retired with
+    self-join + persist (``tools/dump_plan_pair.py <tag>
+    dedup_substring`` on each side of a change dumps the pair; 3.0 s →
+    1.0 s warm at sf0.1).  The r10 small-heap guard retired with
     the join it guarded — the plan now contains no join at all, so a
     bare 1 GiB driver has nothing to broadcast (bare-session sf0.1
     driver-sim re-proven this round).  Oracle equality over the fixed

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import cut_lineage, floordiv_col, query, spread, t
+from ..substrates import substrate
 from .similarity import QUANT, quantized
 
 KMEANS_K = 8
@@ -874,19 +875,7 @@ def similarity_mutual_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped caches for the IVF substrate, keyed by (spark
-#: application id, sf_dir, k_cells) — the in-session stand-in for a
-#: MAINTAINED vector index (the `cached_capped_index` precedent in
-#: dedup.py).  Five registered queries ride this substrate; without the
-#: cache each re-ran the Lloyd training loop (ITERS collect jobs) per
-#: build.  The pairs cache stores a LAZY plan whose centroids are baked
-#: driver-side literals (training already paid); the edges cache stores
-#: the localCheckpoint'd (materialized, ≤ n·k rows) edge frame.  Reuse
-#: changes no results: every consumer reads the identical relation.
-_IVF_PAIRS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-_IVF_EDGES_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@substrate
 def ivf_cell_cosine_pairs(
     spark: SparkSession, sf_dir: str, k_cells: int = KMEANS_K
 ) -> DataFrame:
@@ -897,18 +886,11 @@ def ivf_cell_cosine_pairs(
     grows the cell count with n (``k_cells``), making the build linear
     (K∝n probe rows in BASELINE.md r7).  Session-cached: the Lloyd
     training (the expensive, eager prefix) runs once per
-    (session, corpus, K)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_cells)
-    if key not in _IVF_PAIRS_CACHE:
-        _IVF_PAIRS_CACHE[key] = _build_ivf_cell_cosine_pairs(
-            spark, sf_dir, k_cells
-        )
-    return _IVF_PAIRS_CACHE[key]
-
-
-#: (assignment frame, centroids) per (app, sf_dir, k_cells) — shared by
-#: the pairs builder and the serving-path probe
-_IVF_ASSIGN_CACHE: dict[tuple[str, str, int], tuple[DataFrame, dict]] = {}
+    (session, corpus, K).  A LAZY plan whose centroids are baked
+    driver-side literals; with the edge frame it is the maintained
+    vector index five registered queries ride."""
+    assign, _ = ivf_corpus_assignment(spark, sf_dir, k_cells)
+    return cell_cosine_pairs_from_assignment(assign)
 
 
 def _assign_to_cells(qf: DataFrame, centroids: dict[int, list[int]]) -> DataFrame:
@@ -949,21 +931,20 @@ def _assign_to_cells(qf: DataFrame, centroids: dict[int, list[int]]) -> DataFram
     )
 
 
+@substrate
 def ivf_corpus_assignment(
     spark: SparkSession, sf_dir: str, k_cells: int = KMEANS_K
 ) -> tuple[DataFrame, dict]:
     """Session-cached (corpus cell assignment, trained centroids) — the
-    static index state every substrate consumer and the serving probe
-    share; Lloyd training runs once per (session, corpus, K)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_cells)
-    if key not in _IVF_ASSIGN_CACHE:
-        # r14: the cut quantized frame is itself session-cached
-        from .similarity import cached_cut_qtable
+    static index state every substrate consumer, the pairs builder and
+    the serving probe share; Lloyd training runs once per (session,
+    corpus, K)."""
+    # r14: the cut quantized frame is itself session-cached
+    from .similarity import cached_cut_qtable
 
-        qt = cached_cut_qtable(spark, sf_dir)
-        centroids = train_centroids(qt, k_cells, KMEANS_ITERS)
-        _IVF_ASSIGN_CACHE[key] = (_assign_to_cells(qt, centroids), centroids)
-    return _IVF_ASSIGN_CACHE[key]
+    qt = cached_cut_qtable(spark, sf_dir)
+    centroids = train_centroids(qt, k_cells, KMEANS_ITERS)
+    return (_assign_to_cells(qt, centroids), centroids)
 
 
 def corpus_centroids(
@@ -971,7 +952,7 @@ def corpus_centroids(
 ) -> dict[int, list[int]]:
     """Session-cached full-corpus Lloyd centroids (K=k_cells,
     ITERS=KMEANS_ITERS) — the trained coarse quantizer every
-    full-corpus consumer shares (r14; the `_IVF_ASSIGN_CACHE` already
+    full-corpus consumer shares (r14; `ivf_corpus_assignment` already
     held exactly this state for the substrate queries; this exposes it
     to the direct Lloyd consumers: `embedding_kmeans_lloyd`,
     `embedding_cluster_balanced_sample`, `similarity_ivf_kmeans_topk`,
@@ -1094,13 +1075,7 @@ def mutual_knn_edges_from_pairs(
     )
 
 
-def _build_ivf_cell_cosine_pairs(
-    spark: SparkSession, sf_dir: str, k_cells: int
-) -> DataFrame:
-    assign, _ = ivf_corpus_assignment(spark, sf_dir, k_cells)
-    return cell_cosine_pairs_from_assignment(assign)
-
-
+@substrate
 def ivf_mutual_knn_edges(
     spark: SparkSession, sf_dir: str, k_cells: int = KMEANS_K
 ) -> DataFrame:
@@ -1115,17 +1090,13 @@ def ivf_mutual_knn_edges(
     ``similarity_mutual_knn_ivf``'s recall/precision report measures.
     Session-cached like the pairs frame (one materialized edge frame
     per (session, corpus, K))."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_cells)
-    if key in _IVF_EDGES_CACHE:
-        return _IVF_EDGES_CACHE[key]
     from .similarity import TOP_K
 
     pairs = ivf_cell_cosine_pairs(spark, sf_dir, k_cells)
     ivf_edges = mutual_knn_edges_from_pairs(pairs, TOP_K)
     # materialized once (localCheckpoint): the frame is reused multiply
     # inside each overlay AND across the five substrate consumers
-    _IVF_EDGES_CACHE[key] = cut_lineage(ivf_edges)
-    return _IVF_EDGES_CACHE[key]
+    return cut_lineage(ivf_edges)
 
 
 _QK["similarity_mutual_knn_ivf"] = _dck.replace(
@@ -1723,14 +1694,8 @@ _patch_leakage_safe_split_ivf_oracle()
 # ---------------------------------------------------------------------------
 # centroid drift — the retrain gate for the frozen quantizer
 
-#: (cut assignment frame, frozen centroids) per (app, sf_dir) — shared by
-#: the drift gate and the repair query so the base Lloyd training runs
-#: once per session (the _IVF_ASSIGN_CACHE precedent, frozen edition)
-#: keys: (appId, sf_dir) for the fixed-K regime, (appId, sf_dir, "growk")
-#: for the production-K regime
-_FROZEN_CACHE: dict[tuple[str, ...], tuple[DataFrame, dict]] = {}
 
-
+@substrate
 def _frozen_assignment(
     spark: SparkSession, sf_dir: str, growk: bool = False
 ) -> tuple[DataFrame, dict]:
@@ -1738,27 +1703,22 @@ def _frozen_assignment(
     (the maintained-index family's regime: train on vec_id % 3 <> 0,
     assign everyone).  ``growk=True`` trains at the production
     K = ⌈n_base / GROWK_CELL_TARGET⌉ instead of the fixed KMEANS_K
-    (VERDICT r9 #5); each regime has its own cache slot so both coexist
-    in one session."""
-    key = (spark.sparkContext.applicationId, sf_dir) + (
-        ("growk",) if growk else ()
-    )
-    if key not in _FROZEN_CACHE:
-        # r14: the cut quantized frame is itself session-cached (shared
-        # with the kcenter coreset and any other frozen regime)
-        from .similarity import cached_cut_qtable
+    (VERDICT r9 #5).  Each regime is its own substrate entry, shared by
+    the drift gate and the repair query."""
+    # r14: the cut quantized frame is itself session-cached (shared
+    # with the kcenter coreset and any other frozen regime)
+    from .similarity import cached_cut_qtable
 
-        qt = cached_cut_qtable(spark, sf_dir)
-        base = qt.filter(F.expr(_UPSERT_TRAIN_PRED))
-        k = -(-base.count() // GROWK_CELL_TARGET) if growk else KMEANS_K
-        centroids = train_centroids(
-            base.select("vec_id", "q"), k, KMEANS_ITERS
-        )
-        _FROZEN_CACHE[key] = (
-            cut_lineage(_assign_to_cells(qt, centroids)),
-            centroids,
-        )
-    return _FROZEN_CACHE[key]
+    qt = cached_cut_qtable(spark, sf_dir)
+    base = qt.filter(F.expr(_UPSERT_TRAIN_PRED))
+    k = -(-base.count() // GROWK_CELL_TARGET) if growk else KMEANS_K
+    centroids = train_centroids(
+        base.select("vec_id", "q"), k, KMEANS_ITERS
+    )
+    return (
+        cut_lineage(_assign_to_cells(qt, centroids)),
+        centroids,
+    )
 
 
 def _drift2_frame(

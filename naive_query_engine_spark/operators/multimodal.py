@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import floordiv_col, query, spread, t
+from ..substrates import substrate
 
 DECODE_SCHEMA = "doc_id long, n_bytes long, width long, height long, n_frames long"
 
@@ -1135,32 +1136,24 @@ def ahash_synth_kernel(flipped: bool = False):
     return extract
 
 
-#: session-scoped cache of the perceptual-hash column (r14, guide
-#: §1.2/§4): the aHash table is the maintained index artifact an image
-#: dedup serves from.  The banded-Hamming query consumed the kernel
-#: output TWICE (both join sides of the band self-join — the Python
-#: kernel ran twice per invocation), and every bench rep re-ran it.
-#: Keyed by the kernel's ``flipped`` variant; reuse changes no results.
-_AHASH_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
-
-
+@substrate
 def cached_ahash_table(
     spark: SparkSession, sf_dir: str, flipped: bool
 ) -> DataFrame:
-    """Session-cached (doc_id, phash) via :func:`ahash_synth_kernel`."""
+    """Session-cached (doc_id, phash) via :func:`ahash_synth_kernel`, one
+    entry per ``flipped`` variant.  The maintained aHash index: the
+    banded-Hamming self-join reads it on both sides, so the Python kernel
+    runs once."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, flipped)
-    if key not in _AHASH_CACHE:
-        d = spread(t(spark, sf_dir, "documents"))
-        _AHASH_CACHE[key] = (
-            d.select("doc_id")
-            .mapInPandas(
-                ahash_synth_kernel(flipped=flipped), "doc_id long, phash long"
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    d = spread(t(spark, sf_dir, "documents"))
+    return (
+        d.select("doc_id")
+        .mapInPandas(
+            ahash_synth_kernel(flipped=flipped), "doc_id long, phash long"
         )
-    return _AHASH_CACHE[key]
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 @query(

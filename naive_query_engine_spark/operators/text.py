@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import cut_lineage, query, spread, t
+from ..substrates import substrate
 
 #: tiny per-language function-word lists for the n-gram/stopword language
 #: heuristic (public linguistic common knowledge; deliberately small —
@@ -497,6 +498,54 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sparse retrieval: BM25-style scoring over the token inverted index
 
 
+@substrate
+def cached_tf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-cached (doc_id, term, tf) term-frequency index of the
+    corpus's documents table, persisted MEMORY_AND_DISK.  Terms are
+    xxhash64 BIGINTs (r13, guide §2.3): the term string never reaches
+    any output — tf/df/dl and the probe join only test term EQUALITY —
+    so the 8-byte key replaces the string in the tf aggregation shuffle
+    and every downstream join (oracle equality at all SFs pins the swap
+    collision-free on these corpora).  Lazy: no job runs until a
+    consumer's first action.  The maintained inverted index of
+    text_bm25_topk, retrieval_rrf_fusion, retrieval_eval_mrr_ndcg and
+    retrieval_mmr_diversify."""
+    from pyspark import StorageLevel
+
+    d = t(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.explode(tokens(F.col("text"))).alias("t")
+    ).select("doc_id", F.xxhash64("t").alias("term"))
+    return (
+        toks.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+@substrate
+def cached_bm25_side_tables(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Session-cached ``(dl, dfreq)`` — per-doc length and per-term df —
+    derived from :func:`cached_tf_index`.  Lazy persists.  Index side
+    tables every BM25 call and its retrieval compositions read."""
+    from pyspark import StorageLevel
+
+    tf = cached_tf_index(spark, sf_dir)
+    dl = (
+        tf.groupBy("doc_id")
+        .agg(F.sum("tf").alias("dl"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    dfreq = (
+        tf.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return (dl, dfreq)
+
+
 #: BM25 parameters (standard Robertson defaults) and the fixed-point scale
 #: that turns each per-term score into an exact BIGINT: every per-term
 #: score is ONE identical double expression tree in both engines (IEEE
@@ -506,77 +555,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: replaced by its rational core (N - df + 0.5)/(df + 0.5) (log is
 #: monotone, and libm log is not bit-portable across engines); documented
 #: deviation, same ranking family.
-#: session-scoped cache of the BM25 term-frequency index, keyed by
-#: (spark application id, sf_dir) — the in-session stand-in for the
-#: MAINTAINED inverted index a deployment serves from (the
-#: cached_capped_index idiom, r13).  Four registered consumers
-#: (text_bm25_topk, retrieval_rrf_fusion, retrieval_eval_mrr_ndcg,
-#: retrieval_mmr_diversify) previously each re-ran tokenize→hash→tf and
-#: left a new per-call persist behind; one shared persisted frame per
-#: session replaces them.  Reuse changes no results: every consumer
-#: reads the identical (doc_id, term, tf) relation.
-_TF_INDEX_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
-def cached_tf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (doc_id, term, tf) term-frequency index of the
-    corpus's documents table, persisted MEMORY_AND_DISK.  Terms are
-    xxhash64 BIGINTs (r13, guide §2.3): the term string never reaches
-    any output — tf/df/dl and the probe join only test term EQUALITY —
-    so the 8-byte key replaces the string in the tf aggregation shuffle
-    and every downstream join (oracle equality at all SFs pins the swap
-    collision-free on these corpora).  Lazy: no job runs until a
-    consumer's first action."""
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TF_INDEX_CACHE:
-        d = t(spark, sf_dir, "documents")
-        toks = d.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("t")
-        ).select("doc_id", F.xxhash64("t").alias("term"))
-        _TF_INDEX_CACHE[key] = (
-            toks.groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    return _TF_INDEX_CACHE[key]
-
-
-#: session-scoped cache of the BM25 index SIDE TABLES derived from the tf
-#: index (r14, guide §1.2/§5): doc lengths (doc_id, dl) and document
-#: frequencies (term, df) are index artifacts a deployment maintains next
-#: to the postings — but every text_bm25_topk invocation (and so every
-#: retrieval_rrf_fusion / eval / mmr call, which compose it) re-ran both
-#: corpus-scale aggregations.  One persisted pair per session; reuse
-#: changes no results (identical relations over the cached tf index).
-_BM25_SIDE_CACHE: dict[tuple[str, str], tuple["DataFrame", "DataFrame"]] = {}
-
-
-def cached_bm25_side_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Session-cached ``(dl, dfreq)`` — per-doc length and per-term df —
-    derived from :func:`cached_tf_index`.  Lazy persists."""
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BM25_SIDE_CACHE:
-        tf = cached_tf_index(spark, sf_dir)
-        dl = (
-            tf.groupBy("doc_id")
-            .agg(F.sum("tf").alias("dl"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        dfreq = (
-            tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _BM25_SIDE_CACHE[key] = (dl, dfreq)
-    return _BM25_SIDE_CACHE[key]
-
-
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_SCALE = 1_000_000

@@ -1,12 +1,12 @@
-"""Dump `.explain("formatted")` for the r14 optimization targets.
+"""Dump `.explain("formatted")` for a before/after pair of query plans.
 
-Writes plans/r14/<query>_<tag>.txt for each named query (tag = argv[1],
-"before" or "after").  Runs under SPARK_GRAFT_LAZY_CUTS=1 so plan
-construction for cut-lineage operators does not execute Spark jobs; the
-pre-cut lineage (iteration exchanges included) is visible, matching how
-PLANS.md documents those operators.
+Writes .tmp/plans/<query>_<tag>.txt for each named query (tag = argv[1],
+e.g. "before" or "after"; .tmp/ is gitignored).  Runs under
+SPARK_GRAFT_LAZY_CUTS=1 so plan construction for cut-lineage operators
+does not execute Spark jobs; the pre-cut lineage (iteration exchanges
+included) is visible, matching how PLANS.md documents those operators.
 
-Usage: python tools/dump_r14_plans.py before [names...]
+Usage: python tools/dump_plan_pair.py <tag> [names...]
 """
 
 from __future__ import annotations
@@ -16,7 +16,8 @@ import sys
 
 os.environ.setdefault("SPARK_GRAFT_LAZY_CUTS", "1")
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from naive_query_engine_spark import get_spark  # noqa: E402
 from naive_query_engine_spark.queries import QUERIES  # noqa: E402
@@ -39,16 +40,16 @@ DEFAULT_TARGETS = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    tag = sys.argv[1]
     names = sys.argv[2:] or DEFAULT_TARGETS
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-    )
+    out_dir = os.path.join(REPO, ".tmp", "plans")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="nqes-r14-plans")
+    spark = get_spark(app_name="nqes-plan-pair")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        spark.sparkContext.setJobDescription(f"r14 plan dump: {name}")
+        spark.sparkContext.setJobDescription(f"plan dump: {name}")
         df = QUERIES[name].fn(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

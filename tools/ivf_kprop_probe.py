@@ -6,7 +6,7 @@ times the per-IVF-cell mutual-kNN edge build with k_cells = KMEANS_K*N
 modularity overlay on that substrate.
 
 edges_build_sec is min-of-2 COLD builds (the session IVF caches are
-evicted between iterations — ADVICE r7); edges_cached_read_sec is the
+cleared between iterations — ADVICE r7); edges_cached_read_sec is the
 subsequent cached-frame read the substrate consumers actually see; the
 overlay timing deliberately runs on the cached edges (it measures the
 overlay, not the build).
@@ -24,10 +24,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from naive_query_engine_spark import get_spark  # noqa: E402
-from naive_query_engine_spark.operators import kmeans  # noqa: E402
+from naive_query_engine_spark import get_spark, substrates  # noqa: E402
 from naive_query_engine_spark.operators.kmeans import (  # noqa: E402
     KMEANS_K,
+    ivf_cell_cosine_pairs,
+    ivf_corpus_assignment,
     ivf_mutual_knn_edges,
 )
 from naive_query_engine_spark.operators.clustering import (  # noqa: E402
@@ -71,21 +72,6 @@ def synthesize(spark, n_copies: int, out_dir: str) -> None:
     )
 
 
-def evict_ivf_caches(spark, sf_dir: str, k_cells: int) -> None:
-    """Drop the session-cached IVF state for one (corpus, K) so a repeat
-    timing measures the BUILD again, not a cached localCheckpoint read
-    (ADVICE r7: the min-of-2 loop was otherwise defeated by
-    _IVF_EDGES_CACHE — the second call returned the materialized frame
-    and 'edges_build_sec' reported a cached-scan time)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_cells)
-    for cache in (
-        kmeans._IVF_PAIRS_CACHE,
-        kmeans._IVF_EDGES_CACHE,
-        kmeans._IVF_ASSIGN_CACHE,
-    ):
-        cache.pop(key, None)
-
-
 def main() -> None:
     scales = [int(a) for a in sys.argv[1:]] or [1, 4, 10]
     spark = get_spark(app_name="nqes-ivf-kprop-probe")
@@ -98,7 +84,12 @@ def main() -> None:
             res = {"scale_x": n, "k_cells": k}
             best = float("inf")
             for _ in range(2):
-                evict_ivf_caches(spark, work, k)  # min-of-2 COLD builds
+                # min-of-2 COLD builds: drop the IVF substrates so a repeat
+                # times the BUILD again, not a read of the materialized
+                # edge frame (the cut qtable stays warm)
+                substrates.clear(
+                    ivf_cell_cosine_pairs, ivf_mutual_knn_edges, ivf_corpus_assignment
+                )
                 t0 = time.perf_counter()
                 ivf_mutual_knn_edges(spark, work, k_cells=k).write.format(
                     "noop"
