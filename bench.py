@@ -1,14 +1,16 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark timer: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-  {"metric": "headline_queries_wall_sec", "value": <total>, "unit": "sec",
-   "queries": {"q01_pricing_summary": sec, ...}, "sf": 0.1}
+Each query is fully materialised through the noop sink (the whole plan
+runs, nothing is collected) ``N_RUNS`` times, and the fastest
+run is recorded: the first run pays one-off JVM/codegen warm-up, which a
+long-lived cluster would not see per query.
 
-Execution is full materialization via the noop sink (runs the whole plan,
-returns nothing to the driver) — the honest cost of each query without
-collect() serialization noise.  Each query runs twice; the best time is
-recorded (first run pays one-off JVM/codegen warmup, which a long-lived
-cluster wouldn't see per-query).
+The payload ``{metric, value, unit, queries, sf}`` (``value`` is the sum
+of ``queries``) is printed in full to stderr and written to
+``results/BENCH_LOCAL.json``; stdout gets one compact JSON line
+(:func:`compact_line`).  Wall time is all this file measures: to see
+where a query's time goes (task and CPU time, stages run and skipped,
+effective parallelism), run ``perfbench/run.py`` with ``--trace 1``.
 """
 
 from __future__ import annotations
@@ -23,8 +25,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from naive_query_engine_spark import get_spark  # noqa: E402
 from naive_query_engine_spark.queries import QUERIES  # noqa: E402
 
-#: the bench workload: scan/agg heavy + join heavy + window + every pipeline
-#: operator family (dedup / similarity / text / events)
+#: TPC-H scan/agg and join shapes, windows, events, and at least one
+#: query from every pipeline operator family (dedup, similarity and the
+#: IVF index, graph, text, sketches, k-means, datasets, multimodal,
+#: lakehouse, audit), so a regression in any family moves the total.
+#: Names and order stay fixed: runs are compared query by query.
 BENCH_QUERIES = [
     "q01_pricing_summary",
     "q03_shipping_priority",
@@ -43,307 +48,77 @@ BENCH_QUERIES = [
     "dedup_simhash",
     "similarity_cosine_pairs",
     "similarity_topk_vectorized",
-    # r4 rotation (VERDICT r3 #8): families the driver's correctness sample
-    # has never exercised, now measured every round by the driver's own
-    # bench artifact; dedup_substring + its strided variant land together
-    # so the artifact carries the stride-k speedup evidence directly
     "text_bm25_topk",
     "dedup_substring",
     "dedup_substring_strided",
     "fuzzy_entity_resolution",
-    # r4c rotation (same rationale): the learned-quantizer k-means path,
-    # the hybrid-retrieval composition, and the binning-free drift
-    # statistic join the artifact so each round measures them
     "embedding_kmeans_lloyd",
     "retrieval_rrf_fusion",
     "events_value_drift_ks",
-    # r5 rotation (same rationale): the prefix-filtered high-sim dedup
-    # pass, the fixed-point top-PC, the CBO join-size sketch, and the
-    # jackknife CI join the artifact so each round measures them
     "dedup_tfidf_cosine_prefix",
     "embedding_top_pc_power_iteration",
     "sketch_join_size_estimate",
     "events_value_jackknife_ci",
-    # r6 rotation (same rationale): the asymmetric containment pass, the
-    # robust-trend estimator, the AMS F2 sketch, and the mutual k-NN
-    # graph join the artifact so each round measures them
     "dedup_containment",
     "events_trend_theil_sen",
     "sketch_ams_f2",
     "similarity_mutual_knn",
-    # r6b rotation (second wave, same rationale): the CCNet line-level
-    # pass, the lakehouse MERGE accounting, the perceptual-hash image
-    # dedup, and the CEP absence pattern join the artifact so each round
-    # measures them
     "dedup_segment_exact",
     "pipeline_cdc_merge",
     "multimodal_image_phash_dedup",
     "events_absence_timeout",
-    # r6c rotation (third wave, same rationale): the DSIR selection
-    # pass, the VAD segmentation kernel, the MRL truncation gate, and
-    # the cross-split leakage audit join the artifact so each round
-    # measures them
     "dataset_dsir_importance_weights",
     "multimodal_audio_vad_segments",
     "embedding_matryoshka_prefix_recall",
     "dataset_split_neardup_leakage",
-    # r6d rotation (fourth wave, same rationale): the semantic-coverage
-    # sampler, the text-protocol parse, the lakehouse point-in-time
-    # read, and the mirror-detection matrix join the artifact so each
-    # round measures them
     "embedding_cluster_balanced_sample",
     "multimodal_http_response_parse",
     "orders_snapshot_as_of",
     "dedup_cross_source_overlap",
-    # r7 rotation (VERDICT r6 #6): the SRM guardrail readout, the
-    # tokenizer-efficiency metric, the banded-Hamming image near-dup,
-    # the label-modularity readout ON THE PRODUCTION IVF SUBSTRATE
-    # (the r7 composition — benched in the shape that scales, not the
-    # exact-n² calibration one), and the token-mass dedup report join
-    # the artifact so each round measures them
     "events_ab_srm_check",
     "text_tokenizer_fertility",
     "multimodal_phash_hamming_neardup",
     "graph_label_modularity_ivf",
     "dedup_tokens_saved_by_source",
-    # r8 rotation (VERDICT r7 #5): the τ-range search and HyperANF N(h)
-    # on the production IVF substrate, the structurally-capped U-shape
-    # attribution, the first-fail quality funnel, and the t-closeness
-    # release gate join the artifact so each round measures them
     "similarity_range_search_ivf",
     "graph_neighborhood_function_ivf",
     "events_attribution_position_based",
     "text_quality_funnel",
     "audit_t_closeness",
-    # r9 rotation: the admit arm of the IVF index lifecycle joins the
-    # artifact so each round measures the gate a streaming ingest runs
-    # most often (frozen-assignment substrate is session-cached after
-    # the first run — the modularity-ivf warm-regime precedent; cold
-    # economics are the grow-K probe rows in BASELINE.md r9)
     "dedup_ingest_admit_gate",
-    # r9 wave-2 rotation: the composed admit-then-grow fold (the whole
-    # tick a streaming ingest runs per micro-batch, substrate-warm
-    # regime) and the IVF-PQ serving scan (the compressed-candidate
-    # path — the ANN family's cheapest-bytes-per-candidate shape)
     "similarity_ivf_maintenance_tick",
     "similarity_ivfpq_adc_topk",
-    # r10 rotation: the PRODUCTION-K admit gate (K = ⌈n/150⌉ grow-K
-    # discipline, VERDICT r9 #5) joins the artifact next to its fixed-K
-    # twin so the round bench measures the scaling shape a real ingest
-    # runs (substrate-warm regime; the 10× probe row is BASELINE.md r10),
-    # and the Gonzalez k-center coreset (the diversity-selection
-    # primitive — T map-only passes + T 1-row reduces, shuffle-free)
     "dedup_ingest_admit_gate_growk",
     "embedding_kcenter_coreset",
 ]
 
-#: min-of-3, matching BASELINE.md's methodology — the first run pays
-#: one-off JVM/codegen warmup, and two more runs bound shared-host noise
+#: runs per query; the minimum is recorded
 N_RUNS = 3
 
-#: per-query baselines (sec, sf0.1, min-of-3 warmed session) — the
-#: BASELINE.md numbers each query was calibrated against when it joined
-#: the headline set (r1 table; r4 + r4c rotation tables).  Used to emit
-#: the SAME-RUN calibration ratio (VERDICT r4 #9): single-number totals
-#: on this shared host swing ±15% with load, so the honest read of any
-#: bench artifact is measured-subtotal / baseline-subtotal over the
-#: established queries OF THAT RUN, not a cross-run total comparison.
-BASELINES = {
-    "q01_pricing_summary": 0.908,
-    "q03_shipping_priority": 0.734,
-    "q05_region_revenue": 0.821,
-    "q06_forecast_revenue": 0.205,
-    "q07_nation_trade": 1.342,
-    "q09_profit_by_nation_year": 1.668,
-    "join_inner_chain": 0.477,
-    "agg_grouped_computed_key": 0.161,
-    "window_rank": 0.336,
-    "events_sessionize": 0.449,
-    "asof_join_events_orders": 0.582,
-    # RE-CALIBRATED r8: 0.500 never reproduced in-context in any round
-    # artifact (r5 0.835 / r6 0.786 / r7 0.671 / r8 same-day min 0.705)
-    # — a miscalibrated figure, not a regression (BASELINE.md r8 re-read)
-    "range_join_event_pairs": 0.700,
-    "text_quality_score": 0.262,
-    "dedup_minhash_lsh": 2.662,
-    "dedup_simhash": 2.648,
-    # RE-CALIBRATED IN-CONTEXT r7 (VERDICT r6 #1): the old 0.604 was a
-    # SOLO min; tools/bench_diag.py measured the query min-of-5 AT ITS
-    # BENCH POSITION in three full-sequence runs (quiet asis 0.718 @
-    # est 0.998, quiet hygiene 0.696 @ 1.012, loaded 0.765 @ 1.79) —
-    # in-context cost is ~1.15-1.2x solo for this numpy-Arrow kernel
-    # and clearCache between queries changes nothing (hypothesis
-    # refuted; BASELINE.md r7).  Baseline = min normalized read.
-    "similarity_cosine_pairs": 0.70,
-    "similarity_topk_vectorized": 0.362,
-    "text_bm25_topk": 1.857,
-    "dedup_substring": 3.483,
-    "dedup_substring_strided": 1.475,
-    "fuzzy_entity_resolution": 1.478,
-    "embedding_kmeans_lloyd": 2.152,
-    "retrieval_rrf_fusion": 1.959,
-    "events_value_drift_ks": 1.165,
-    # r5 rotation: from a run whose established-24-query subtotal read
-    # 0.99x its baseline (BASELINE.md round-5 table)
-    "dedup_tfidf_cosine_prefix": 2.905,
-    "embedding_top_pc_power_iteration": 1.749,
-    "sketch_join_size_estimate": 0.904,
-    "events_value_jackknife_ci": 0.532,
-    # RE-CALIBRATED r10: the r6-calibration 1.004 never reproduced in
-    # 12+ in-context reads across five rounds (r6 1.678, r7/r8 artifacts
-    # ~1.28, r9 six-run day floor 1.67, r10 three-run day floor 1.61 at
-    # established 1.006).  A same-day solo-quiet min-of-5 read 1.295 —
-    # the kernel/plan floor is intact (md5-stable plan, dedup.py
-    # untouched since r6); the in-context delta is the late-position
-    # JVM-state tax (code-cache exhaustion, bisected r10 — see
-    # session.py).  Baseline = the solo floor ≈ the r7/r8 artifact
-    # readings (BASELINE.md r10).
-    "dedup_containment": 1.30,
-    "events_trend_theil_sen": 0.410,
-    "sketch_ams_f2": 1.451,
-    "similarity_mutual_knn": 1.358,
-    # r6b rotation: from a quiet-machine run (load 0.2) whose
-    # established-24-query subtotal read 0.906x baseline and whose
-    # 8-query fresh subtotal read 1.005x — measured min-of-3 divided by
-    # the same-run 0.906x ratio (BASELINE.md round-6 second wave)
-    "dedup_segment_exact": 1.589,
-    # RE-CALIBRATED r11 (down): two post-code-cache-fix in-context reads
-    # 0.821/0.837 (both in runs whose established ratio read ~1.16 on a
-    # decaying host — the true floor is if anything lower); the r6b
-    # figure predates the session.py fix (VERDICT r10 #2 sweep)
-    "pipeline_cdc_merge": 0.82,
-    "multimodal_image_phash_dedup": 0.863,
-    "events_absence_timeout": 0.618,
-    # r6c rotation: per-query MIN over three same-day 40-query runs
-    # divided by those runs' min-based established ratio (0.949) — two
-    # of the three single runs carried opposite-phase load transients
-    # (est 1.053/fresh 1.69, then est 1.471/fresh 1.16), so the
-    # per-query-min calibration is the honest read (BASELINE.md round-6
-    # third wave)
-    # re-calibrated after the cache-free two-pass redesign (BASELINE.md
-    # round-6 third wave): measured 4.754 min-of-3 in a warm session
-    # whose 3-anchor subtotal read 1.048x -> 4.536
-    # RE-CALIBRATED r11 (down): two post-code-cache-fix in-context reads
-    # 3.19/3.02 (0.70x/0.67x) on loaded ~1.16-established runs — the r6
-    # figure embedded the late-position JIT tax (VERDICT r10 #2 sweep)
-    "dataset_dsir_importance_weights": 3.02,
-    # RE-CALIBRATED r10 (down): the r7 figure 3.43 embedded the JIT
-    # code-cache tax (session.py bisect) — with the 1g-cache fix the
-    # kernel reads 2.264/2.169 in two full in-context runs (min 2.17;
-    # solo-quiet floor 2.23).  Two confirming post-fix reads per the
-    # discipline (the containment lesson: never calibrate on one).
-    "multimodal_audio_vad_segments": 2.17,
-    "embedding_matryoshka_prefix_recall": 1.480,
-    "dataset_split_neardup_leakage": 0.535,
-    # r6d rotation: per-query MIN over three same-day 44-query runs
-    # (est ratios 0.973 / 0.823 / 0.833; min-based 0.807) divided by the
-    # min-based established ratio — BASELINE.md r6 fourth wave
-    "embedding_cluster_balanced_sample": 2.124,
-    "multimodal_http_response_parse": 0.509,
-    "orders_snapshot_as_of": 0.292,
-    "dedup_cross_source_overlap": 0.950,
-    # r7 rotation: per-query MIN over three same-day 49-query runs,
-    # normalized by each run's established ratio (0.939/0.958/0.950 —
-    # a quiet host; BASELINE.md r7 calibration section)
-    "events_ab_srm_check": 0.301,
-    "text_tokenizer_fertility": 0.362,
-    "multimodal_phash_hamming_neardup": 1.247,
-    # RE-CALIBRATED late-r7: the IVF substrate became session-cached
-    # (Lloyd training paid once), so min-of-3 now measures the cached
-    # path — 0.366 raw @ est 1.057 in the confirming run (was 4.857
-    # cold).  The cold build cost is the substrate's own probe rows in
-    # BASELINE.md; the bench measures the regime a warm session sees.
-    "graph_label_modularity_ivf": 0.346,
-    "dedup_tokens_saved_by_source": 1.116,
-    # r8 rotation: per-query MIN over three same-day 54-query runs
-    # (calibration runs recorded in BASELINE.md r8).  The two IVF
-    # consumers measure the substrate-cache-warm in-context regime (the
-    # graph_label_modularity_ivf precedent — cold build economics live
-    # in the K∝n probe rows).
-    "similarity_range_search_ivf": 2.359,
-    "graph_neighborhood_function_ivf": 0.827,
-    "events_attribution_position_based": 1.143,
-    "text_quality_funnel": 0.656,
-    "audit_t_closeness": 0.353,
-    # r9 rotation: per-query MIN over three same-day 55-query runs
-    # normalized by each run's min-based established ratio (BASELINE.md
-    # r9 calibration section).  Measures the substrate-cache-warm
-    # in-context regime (frozen assignment trained once per session —
-    # the graph_label_modularity_ivf precedent); cold economics are the
-    # r9 grow-K probe rows.
-    "dedup_ingest_admit_gate": 1.178,
-    # r9 wave-2 rotation: per-query MIN over three same-day 57-query
-    # runs (est ratios 1.134/1.109/1.196; min-based 1.020 — a quiet
-    # window) normalized by the min-based established ratio
-    # (BASELINE.md r9 wave-2 calibration section); substrate-warm
-    # in-context regime for the tick, broadcast-ADC scan for IVF-PQ
-    "similarity_ivf_maintenance_tick": 2.468,
-    "similarity_ivfpq_adc_topk": 1.651,
-    # r10 rotation: pre-fix calibration read 1.02 (day-floor 1.006);
-    # two POST-code-cache-fix reads landed 0.851/0.996 (runs 6/7 —
-    # position 58 benefits from the fix), so the baseline is the
-    # conservative post-fix figure (BASELINE.md r10 close)
-    "dedup_ingest_admit_gate_growk": 0.95,
-    # r10 rotation wave 2: first full in-context read 1.914 (run 6,
-    # est 1.074 — session-warm beats the 2.765 solo probe; fresh
-    # rotation confirms over coming rounds)
-    "embedding_kcenter_coreset": 1.91,
-}
-
-#: the calibration population (ADVICE r5): only queries whose baselines
-#: carry multi-round independent confirmation enter the host-drift
-#: ratio.  Freshly-rotated queries keep their single-run
-#: 0.99x-calibrated baselines in BASELINES (still reported per-query)
-#: but are EXCLUDED from the calibration subtotal until two independent
-#: rounds re-measure them consistently — otherwise the drift correction
-#: is partially self-referential on their first re-read.  Graduation
-#: ledger: the r5 four (tfidf-prefix / top-PC / join-size sketch /
-#: jackknife) GRADUATED r7 — BENCH_r06 was their third independent
-#: confirming read (1.00/1.03/1.13/1.21x raw inside the 1.143x-ratio
-#: run → 0.87/0.90/0.99/1.06 normalized, consistent with the r5/r6
-#: reads recorded in prior ledger states).  GRADUATED r8: the r6 four
-#: (containment / theil-sen / ams-f2 / mutual-knn) and the r6b/r6c/r6d
-#: groups — each had a BENCH_r06 reading at-or-below normalized
-#: baseline and a consistent BENCH_r07 confirming read (norm 0.44–1.33
-#: inside the 0.958 run; worst: containment 1.33, snapshot_as_of 1.28,
-#: cross-source 1.24 — all within the ≤1.5 graduation tolerance with a
-#: prior at-baseline read).  GRADUATED r9: the r7 five (srm /
-#: fertility / phash-hamming / modularity-ivf / tokens-saved) — first
-#: read BENCH_r07 (norm 1.02–1.18), confirming read BENCH_r08 (raw
-#: 1.17–1.42 inside the 1.109×-established, documented wildly-loaded r8
-#: host window → normalized ~1.05–1.28, consistent).  The r8 five
-#: (range-search-ivf / neighborhood-fn-ivf / capped attribution /
-#: quality-funnel / t-closeness) got their FIRST artifact read in
-#: BENCH_r08 (raw 1.06–1.23×).  GRADUATED r10: those r8 five — the
-#: BENCH_r09 confirming read landed raw 0.92/1.23/1.04/1.11/1.19×
-#: inside the 1.236×-established, load-attributed r9 window →
-#: normalized 0.74–1.00, all at-or-below baseline.  GRADUATED r11
-#: (VERDICT r10 #5): the r9 three (tick / ivfpq / admit-gate) — first
-#: reads BENCH_r09 (2.59/1.77/1.05 raw), confirming reads BENCH_r10
-#: (3.5/2.6/1.2 raw inside the load-decaying 1.19×-established window;
-#: in-context mins that round read 1.01/0.96/0.88 normalized).
-#: GRADUATED r12 (VERDICT r11 #4): the r10 two — growk (0.95 baseline;
-#: BENCH_r11 confirming read 0.85 raw = 0.90 normalized inside the
-#: 0.992× run, third consistent post-code-cache-fix read) and kcenter
-#: (1.91 single-read baseline; BENCH_r11 confirming read 1.73 raw =
-#: 0.90 normalized on run 5, the day-floor run).  dedup_containment's
-#: 1.30 re-calibration CONFIRMED r12 (VERDICT r11 #4/ADVICE r10): the
-#: r12 full-artifact read was 1.752 inside a 1.089× run (normalized
-#: 1.61); the same-day solo min-of-3 read 1.71 with a q09 drift
-#: sentinel at 1.23× in the SAME session → drift-normalized 1.39 ≈
-#: 1.07× the 1.30 baseline.  Nowhere near the old 1.004 — 1.30 is
-#: real; no provisional baselines remain.
-FRESH_ROTATION: list[str] = []
-ESTABLISHED = [q for q in BASELINES if q not in FRESH_ROTATION]
+#: the compact stdout line must fit this many characters, because
+#: consumers parse it out of a 2000-character tail of stdout
+LINE_LIMIT = 1900
 
 
-def run_one(spark, name: str, sf_dir: str, reps: int = N_RUNS) -> float:
+def run_one(spark, name: str, sf_dir: str) -> float:
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(N_RUNS):
         t0 = time.perf_counter()
         QUERIES[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
     return best
+
+
+def compact_line(payload: dict) -> str:
+    """``payload`` as one JSON line, per-query seconds rounded to the
+    first of 3, 2, 1 or 0 decimals that fits ``LINE_LIMIT`` (0 decimals
+    prints whole seconds as integers)."""
+    for digits in (3, 2, 1, None):
+        queries = {k: round(v, digits) for k, v in payload["queries"].items()}
+        line = json.dumps({**payload, "queries": queries}, separators=(",", ":"))
+        if len(line) <= LINE_LIMIT:
+            break
+    return line
 
 
 def main() -> None:
@@ -355,130 +130,17 @@ def main() -> None:
     # warm the JVM + parquet footers once so query 1 isn't charged for startup
     QUERIES["agg_ungrouped"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        timings[name] = round(run_one(spark, name, sf_dir), 3)
-    mid_run = dict(timings)
-
-    # Cache-flush-lottery guard (VERDICT r10 #3): in a ~60-query min-of-3
-    # single-JVM run, code-cache flushing is stochastic — it rotates which
-    # kernel runs partly interpreted, so ONE inflated reading is not
-    # evidence about the plan (r10: agg_grouped_computed_key read 2.48x
-    # mid-run and 1.14x at end-of-run in the same artifact).  Any
-    # established query whose mid-run min reads >1.5x its baseline gets an
-    # end-of-run re-read; the reported per-query number is the min of
-    # both readings and the mid-run figure is preserved in reread_mid_sec.
-    suspects = sorted(
-        (
-            q
-            for q in BENCH_QUERIES
-            if q in ESTABLISHED and timings[q] > 1.5 * BASELINES[q]
-        ),
-        key=lambda q: timings[q] / BASELINES[q],
-        reverse=True,
-    )
-    rereads: dict[str, float] = {}
-    rereads_end: dict[str, float] = {}
-    rereads_skipped: dict[str, float] = {}
-    budget = 30.0  # seconds of mid-run readings; worst ratios first
-    for name in suspects:
-        # As many reps as the remaining budget affords, floor 1 rep if
-        # even that fits: r12 caught the WORST suspect (vad at 4.9x,
-        # est 3 reps = 32s) being the one skipped by the all-or-nothing
-        # N_RUNS cost check, while two milder suspects re-read fine.
-        # One end-of-run rep is exactly the lottery evidence the guard
-        # exists to collect; min(mid, end) still never hurts the mid.
-        reps = min(N_RUNS, int(budget // timings[name]))
-        if reps < 1:
-            # worst-first, but a cheaper later suspect may still fit —
-            # skip rather than stop (ADVICE r11 #2: check cost BEFORE
-            # issuing the re-read, not after).  RECORD the skip: a
-            # too-expensive-to-re-read suspect must be distinguishable
-            # in the artifact from "never flagged" — it is exactly the
-            # reading a real regression would produce.
-            rereads_skipped[name] = timings[name]
-            continue
-        budget -= timings[name] * reps
-        again = round(run_one(spark, name, sf_dir, reps=reps), 3)
-        # Record EVERY re-read, improved or not (ADVICE r11 #2): a
-        # re-read that CONFIRMS the slow mid reading — the signal most
-        # relevant to a real regression — must be distinguishable in the
-        # artifact from "never re-read".
-        rereads[name] = timings[name]
-        rereads_end[name] = again
-        if again < timings[name]:
-            timings[name] = again
-
-    # In-artifact load proxy (VERDICT r8 #6): re-run the three cheapest
-    # established sentinels AT BENCH END and report end/mid spread — a
-    # co-rise here says the HOST drifted during the run (external load),
-    # letting a >1.2 established ratio be attributed without BASELINE.md
-    # archaeology; flat proxies + one inflated query says code.
-    proxy_names = ("agg_grouped_computed_key", "window_rank", "text_quality_score")
-    proxy_end = {n: round(run_one(spark, n, sf_dir), 3) for n in proxy_names}
-    load_proxy = round(
-        sum(proxy_end.values()) / max(sum(mid_run[n] for n in proxy_names), 1e-9), 3
-    )
-
-    total = round(sum(timings.values()), 3)
-    est = [q for q in BENCH_QUERIES if q in ESTABLISHED]
-    est_measured = sum(timings[q] for q in est)
-    est_baseline = sum(BASELINES[q] for q in est)
+    timings = {name: round(run_one(spark, name, sf_dir), 3) for name in BENCH_QUERIES}
     payload = {
         "metric": "headline_queries_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # same-run calibration (VERDICT r4 #9): ratio of this run's
-        # established-query subtotal to those queries' BASELINE.md
-        # values — the host-drift-corrected number to judge
-        "established_subtotal_ratio": round(est_measured / est_baseline, 3),
-        "established_baseline_sec": round(est_baseline, 3),
-        "established_queries": len(est),
-        # first-re-measure evidence for freshly-rotated queries
-        # (their single-run baselines are NOT in the calibration
-        # ratio above; this field is what graduates them)
-        "fresh_subtotal_ratio": round(
-            sum(timings[q] for q in BENCH_QUERIES if q in FRESH_ROTATION)
-            / max(
-                sum(BASELINES[q] for q in BENCH_QUERIES if q in FRESH_ROTATION),
-                1e-9,
-            ),
-            3,
-        )
-        if any(q in FRESH_ROTATION for q in BENCH_QUERIES)
-        else None,
-        # end-of-run re-read of the three cheapest sentinels ÷ their
-        # mid-run readings: >1.2 means the host was drifting DURING the
-        # run (broad-inflation signature); ~1.0 means readings are clean
-        "load_proxy_end_over_mid": load_proxy,
-        "load_proxy_end_sec": proxy_end,
-        # mid-run readings for queries the lottery guard re-read (the
-        # reported value in "queries" is min(mid, end) — this field is
-        # what shows the flush lottery struck and got corrected)
-        "reread_mid_sec": rereads,
-        # the matching end-of-run readings, recorded even when they
-        # CONFIRM the slow mid number (ADVICE r11 #2) — end ≈ mid here
-        # is the real-regression signature, not a flush victim
-        "reread_end_sec": rereads_end,
-        # suspects flagged but too expensive for even ONE rep within the
-        # remaining budget — uncorrected mids, NOT cleared: exactly the
-        # reading a real regression would leave behind
-        "reread_skipped_sec": rereads_skipped,
     }
-    # The round driver keeps only the LAST 2000 chars of stdout and parses
-    # the JSON out of them (BENCH_r08 was unparseable: the 54-query line
-    # outgrew the window and lost its head).  Emit the FULL payload on
-    # stderr for humans, and on stdout exactly ONE compact line, dropping
-    # optional fields (never the spec-required metric/value/unit/queries/
-    # sf) until it fits the driver's window.
     print(json.dumps(payload, indent=1), file=sys.stderr)
-    # Full-fidelity artifact in results/ (gitignored — ADVICE r10 #2: it
-    # used to land next to bench.py and dirty the checkout on every run):
-    # the compact stdout line below trims fields to fit the driver's
-    # 2000-char tail window, so the driver's own run leaves its complete
-    # payload here for the judge.
+    # results/ is gitignored; the full-precision copy survives the
+    # rounding of the stdout line
     try:
         results_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "results")
         os.makedirs(results_dir, exist_ok=True)
@@ -486,38 +148,7 @@ def main() -> None:
             json.dump(payload, fh, indent=1)
     except OSError as exc:
         print(f"bench: could not write results/BENCH_LOCAL.json: {exc}", file=sys.stderr)
-
-    def _line() -> str:
-        return json.dumps(payload, separators=(",", ":"))
-
-    line = _line()
-    for drop in ("reread_skipped_sec", "reread_mid_sec", "reread_end_sec", "load_proxy_end_sec", "established_baseline_sec", "established_queries"):
-        if len(line) <= 1900:
-            break
-        payload.pop(drop, None)
-        line = _line()
-    if len(line) > 1900:  # trim per-query precision before losing the
-        # ratio fields — fresh_subtotal_ratio is what graduates rotations
-        payload["queries"] = {k: round(v, 2) for k, v in payload["queries"].items()}
-        line = _line()
-    if len(line) > 1900:  # r10: at 58 queries even 2dp overflowed and the
-        # old order dropped ALL ratio fields (run-1 line was 1879 chars
-        # ratio-free) — 1dp per-query costs ~58 chars and keeps the
-        # established ratio, the judge's primary number; full precision
-        # stays in the stderr payload
-        payload["queries"] = {k: round(v, 1) for k, v in payload["queries"].items()}
-        line = _line()
-    # drop order matters: the load proxy goes first (attributable from
-    # BASELINE.md), the fresh ratio second (graduation evidence), the
-    # established ratio LAST (the judge's primary number) — BENCH run 1
-    # of the r9 wave-2 calibration lost fresh+load to the old
-    # fresh-first order at 57 queries
-    for drop in ("load_proxy_end_over_mid", "fresh_subtotal_ratio", "established_subtotal_ratio"):
-        if len(line) <= 1900:
-            break
-        payload.pop(drop, None)
-        line = _line()
-    print(line)
+    print(compact_line(payload))
 
 
 if __name__ == "__main__":

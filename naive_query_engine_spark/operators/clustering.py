@@ -22,7 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries import cut_lineage, query, t
+from ..queries import cut_lineage, query, release_cut, t
 from ..substrates import substrate
 from .shingles_sql import (
     EDGES_SQL as _LEAF_EDGES_SQL,
@@ -97,9 +97,11 @@ def connected_components(
         )
 
     # the returned labels come from an eager cut, so nothing reads sym
-    # after the fixpoint: release it whether it converges or raises
+    # after the fixpoint: release it whether it converges or raises.  Each
+    # round's cut is read only by the next round, so it is released once
+    # the next round's cut has materialized; the last one backs the result
+    prev_cut = None
     try:
-        converged = False
         for r in range(max_iter):
             if r < 2:
                 # plain round: one neighbor-min join; old and new labels live
@@ -134,21 +136,24 @@ def connected_components(
                     )
                 )
             new_labels = stepped.transform(cut_lineage)
+            if prev_cut is not None:
+                release_cut(prev_cut)
+            prev_cut = new_labels
             changed = new_labels.filter(F.col("chg")).limit(1).count()
             labels = new_labels.select("id", "component")
             if changed == 0:
-                converged = True
-                break
-        if not converged:
-            # silent non-convergence would emit wrong (split) components for
-            # any cluster whose diameter exceeds max_iter — fail loudly instead
-            raise RuntimeError(
-                f"connected_components: not converged after {max_iter} iterations "
-                "(a component's diameter exceeds max_iter); raise max_iter"
-            )
-        return labels
+                prev_cut = None  # kept: it backs the returned labels
+                return labels
+        # silent non-convergence would emit wrong (split) components for
+        # any cluster whose diameter exceeds max_iter — fail loudly instead
+        raise RuntimeError(
+            f"connected_components: not converged after {max_iter} iterations "
+            "(a component's diameter exceeds max_iter); raise max_iter"
+        )
     finally:
         sym.unpersist()
+        if prev_cut is not None:
+            release_cut(prev_cut)
 
 
 # ---------------------------------------------------------------------------
@@ -1532,16 +1537,14 @@ def graph_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind MATERIALIZED hints (referenced twice in sym — the DuckDB
     CTE-inlining discipline) into the recursive-reach components CTE."""
     from ..queries import QUERIES as _Q
+    from .graph_overlays import component_size_histogram
 
     e = t(spark, sf_dir, "embeddings")
     edges = _Q["similarity_mutual_knn"].fn(spark, sf_dir).select(
         F.col("vec_a").alias("a"), F.col("vec_b").alias("b")
     )
-    comp = connected_components(e.select(F.col("vec_id").alias("id")), edges)
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    return sizes.groupBy(F.col("csize").cast("long").alias("cluster_size")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters"),
-        (F.col("cluster_size") * F.count(F.lit(1))).cast("long").alias("n_vectors"),
+    return component_size_histogram(
+        connected_components(e.select(F.col("vec_id").alias("id")), edges)
     )
 
 

@@ -222,6 +222,17 @@ def knn_components_oracle_with(knn_with: str, recursive: bool = True) -> str:
     """
 
 
+def component_size_histogram(comp: DataFrame) -> DataFrame:
+    """(cluster_size, n_clusters, n_vectors) over connected-components
+    labels (id, component) — the Spark twin of
+    :func:`knn_components_oracle_with`'s final SELECT."""
+    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
+    return sizes.groupBy(F.col("csize").cast("long").alias("cluster_size")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_clusters"),
+        (F.col("cluster_size") * F.count(F.lit(1))).cast("long").alias("n_vectors"),
+    )
+
+
 def leakage_safe_split_oracle_with(knn_with: str) -> str:
     """Component-keyed leakage-safe split census over any substrate:
     ``knn_with`` opens the WITH clause and must define

@@ -3480,16 +3480,14 @@ def graph_knn_components_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: component = min reachable vec_id (exact integers over
     the substrate's deterministic edge set); exact counting."""
     from .clustering import connected_components
+    from .graph_overlays import component_size_histogram
 
     e = t(spark, sf_dir, "embeddings")
     edges = ivf_mutual_knn_edges(spark, sf_dir).select(
         F.col("vec_a").alias("a"), F.col("vec_b").alias("b")
     )
-    comp = connected_components(e.select(F.col("vec_id").alias("id")), edges)
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    return sizes.groupBy(F.col("csize").cast("long").alias("cluster_size")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters"),
-        (F.col("cluster_size") * F.count(F.lit(1))).cast("long").alias("n_vectors"),
+    return component_size_histogram(
+        connected_components(e.select(F.col("vec_id").alias("id")), edges)
     )
 
 

@@ -119,9 +119,12 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     the full pre-cut lineage — iteration exchanges included — becomes
     visible to explain.  Inspection-only: executing a lazy-built frame
     recomputes every iteration inside one job, and for frames that
-    reference a cut twice (the BPE trainer's counts) plan ANALYSIS itself
-    doubles per iteration — never run results, or the plan-budget tests,
-    under this flag.
+    reference a cut more than once plan ANALYSIS itself grows
+    geometrically per iteration — the BPE trainer's counts (twice) and
+    ``connected_components``' accelerated rounds (the label frame three
+    times per substep, from round 3; a 4-node chain already takes over
+    a minute to construct on 4 cores) — never run results, or the
+    plan-budget tests, under this flag.
     """
     import os
 
@@ -137,6 +140,20 @@ def cut_lineage(df: DataFrame) -> DataFrame:
             )
         return df.checkpoint()
     return df.localCheckpoint()
+
+
+def release_cut(df: DataFrame) -> None:
+    """Free the blocks behind ``df``, a frame :func:`cut_lineage` returned,
+    once nothing reads it any more (non-blocking).  Only the default
+    ``localCheckpoint`` cut holds blocks: the lazy no-op and the reliable
+    checkpoint (its files live in the checkpoint dir) have none here."""
+    import os
+
+    if os.environ.get("SPARK_GRAFT_LAZY_CUTS") or os.environ.get(
+        "SPARK_GRAFT_RELIABLE_CHECKPOINT"
+    ):
+        return
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def floordiv_col(x: Column, d: Column) -> Column:

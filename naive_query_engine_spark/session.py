@@ -114,11 +114,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same entry point works in the test harness and the bench driver.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and without that
+    env var to ``local[<cores this process may run on>]``, so an unset run
+    never starts more task threads than the host gives it.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = {**DEFAULT_CONF, **(extra_conf or {})}

@@ -109,29 +109,32 @@ def test_clear_all_unpersists_held_frames(spark, cache):
     assert held.storageLevel == StorageLevel.NONE
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _cut_rdd_id(df) -> int:
+    """Id of the checkpointed RDD that the (projected) cut frame reads."""
+    return df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().id()
 
 
 @pytest.mark.parametrize("max_iter", [25, 1])
-def test_connected_components_releases_its_edge_frame(spark, monkeypatch, max_iter):
+def test_connected_components_releases_its_edge_frame(spark, max_iter):
     """The symmetrized edge frame is persisted for the fixpoint and
-    released after it, whether it converges or raises.  Lazy cuts keep
-    the per-round localCheckpoints out of the persistent-RDD count, so
-    the count isolates that frame."""
+    released after it, whether it converges or raises.  A chain needs
+    the accelerated rounds, so several rounds cut their labels: a
+    converged call keeps only the cut behind its result, a failed one
+    keeps none."""
     from naive_query_engine_spark.operators.clustering import connected_components
 
-    monkeypatch.setenv("SPARK_GRAFT_LAZY_CUTS", "1")
     vertices = spark.range(6)
-    # stars converge in two plain rounds, which keeps the lazy plans small
-    edges = spark.createDataFrame([(0, 1), (0, 2), (4, 5)], "a long, b long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "a long, b long")
     before = _persistent_rdds(spark)
     if max_iter == 1:  # the first round changes labels, so one is too few
         with pytest.raises(RuntimeError, match="not converged"):
             connected_components(vertices, edges, max_iter=max_iter)
+        assert _persistent_rdds(spark) <= before
     else:
         labels = connected_components(vertices, edges, max_iter=max_iter)
-        assert sorted(map(tuple, labels.collect())) == [
-            (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)
-        ]
-    assert _persistent_rdds(spark) <= before
+        assert sorted(map(tuple, labels.collect())) == [(i, 0) for i in range(6)]
+        assert _persistent_rdds(spark) - before == {_cut_rdd_id(labels)}
