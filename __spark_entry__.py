@@ -35,9 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted → rows-only check)."""
-    return {
-        name: _queries.QUERIES[name].oracle
-        for name in _ordered_names()
-        if _queries.QUERIES[name].oracle is not None
-    }
+    """DuckDB-equivalent SQL per query; every registered query has one."""
+    return {name: _queries.QUERIES[name].oracle for name in _ordered_names()}

@@ -310,7 +310,7 @@ def _semantic_oracle() -> str:
 
 @query(
     "dedup_semantic",
-    oracle=_semantic_oracle(),
+    oracle=_semantic_oracle,
     tags=("dedup", "pipeline", "clustering", "similarity", "iterative"),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,7 +495,7 @@ def _pr_oracle() -> str:
 
 @query(
     "graph_pagerank",
-    oracle=_pr_oracle(),
+    oracle=_pr_oracle,
     tags=("graph", "iterative", "pipeline"),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -591,7 +591,7 @@ def _ppr_oracle() -> str:
 
 @query(
     "graph_pagerank_personalized",
-    oracle=_ppr_oracle(),
+    oracle=_ppr_oracle,
     tags=("graph", "iterative", "pipeline", "retrieval"),
 )
 def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,7 +691,7 @@ def _keep_best_oracle() -> str:
 
 @query(
     "dedup_keep_best",
-    oracle=None,  # patched below (needs pipeline.MODEL_WEIGHTS at import time)
+    oracle=_keep_best_oracle,
     tags=("dedup", "pipeline", "clustering", "quality"),
 )
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,13 +737,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_members",
         )
     )
-
-
-import dataclasses as _dc  # noqa: E402
-
-from ..queries import QUERIES as _QREG  # noqa: E402
-
-_QREG["dedup_keep_best"] = _dc.replace(_QREG["dedup_keep_best"], oracle=_keep_best_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1022,7 +1015,7 @@ def _leakage_safe_oracle() -> str:
 
 @query(
     "dataset_split_leakage_safe",
-    oracle=_leakage_safe_oracle(),
+    oracle=_leakage_safe_oracle,
     tags=("pipeline", "split", "dedup", "clustering", "composition"),
 )
 def dataset_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,7 +1318,7 @@ def _kcore_oracle(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
 
 @query(
     "graph_kcore_peeling",
-    oracle=_kcore_oracle(),
+    oracle=_kcore_oracle,
     tags=("graph", "dedup", "iterative", "quality"),
 )
 def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,7 +1503,7 @@ def _knn_components_oracle() -> str:
 
 @query(
     "graph_knn_components",
-    oracle=_knn_components_oracle(),
+    oracle=_knn_components_oracle,
     tags=("similarity", "graph", "clustering", "curation", "iterative"),
 )
 def graph_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1575,7 +1568,7 @@ def _link_prediction_oracle() -> str:
 
 @query(
     "graph_link_prediction",
-    oracle=_link_prediction_oracle(),
+    oracle=_link_prediction_oracle,
     tags=("similarity", "graph", "link-prediction", "curation"),
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1677,7 +1670,7 @@ def _split_neardup_leakage_oracle() -> str:
 
 @query(
     "dataset_split_neardup_leakage",
-    oracle=_split_neardup_leakage_oracle(),
+    oracle=_split_neardup_leakage_oracle,
     tags=("pipeline", "split", "dedup", "evaluation", "composition"),
 )
 def dataset_split_neardup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1790,7 +1783,7 @@ def _label_modularity_oracle() -> str:
 
 @query(
     "graph_label_modularity",
-    oracle=None,  # patched below (splices the mutual-kNN oracle)
+    oracle=_label_modularity_oracle,
     tags=("graph", "evaluation", "similarity", "clustering"),
 )
 def graph_label_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1827,18 +1820,6 @@ def graph_label_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NOTE: ``graph_label_modularity_ivf`` is registered in kmeans.py next
 # to the substrate (same circular-import reason as link prediction —
 # see the note above ``graph_link_prediction``'s section).
-
-
-def _patch_label_modularity_oracle() -> None:
-    from ..queries import QUERIES as _Q
-    import dataclasses as _dcm
-
-    _Q["graph_label_modularity"] = _dcm.replace(
-        _Q["graph_label_modularity"], oracle=_label_modularity_oracle()
-    )
-
-
-_patch_label_modularity_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1891,7 +1872,7 @@ def _tokens_saved_oracle() -> str:
 
 @query(
     "dedup_tokens_saved_by_source",
-    oracle=_tokens_saved_oracle(),
+    oracle=_tokens_saved_oracle,
     tags=("dedup", "pipeline", "profiling", "budget", "composition"),
 )
 def dedup_tokens_saved_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:

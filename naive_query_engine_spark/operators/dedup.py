@@ -770,7 +770,7 @@ def _minhash_oracle() -> str:
     """
 
 
-@query("dedup_minhash_lsh", oracle=_minhash_oracle(), tags=("dedup", "pipeline", "minhash", "lsh"))
+@query("dedup_minhash_lsh", oracle=_minhash_oracle, tags=("dedup", "pipeline", "minhash", "lsh"))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup detection (shingle → minhash → band → bucket-join
     → verify).  K=MINHASH_K hashes, MINHASH_BANDS bands × MINHASH_R rows."""
@@ -909,7 +909,7 @@ def _simhash_oracle() -> str:
     """
 
 
-@query("dedup_simhash", oracle=_simhash_oracle(), tags=("dedup", "pipeline", "simhash"))
+@query("dedup_simhash", oracle=_simhash_oracle, tags=("dedup", "pipeline", "simhash"))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (32-bit signatures, Hamming <= 3).  The
     signature table is the session-cached sketch (r14); the banded
@@ -1490,7 +1490,7 @@ def _minhash_recall_oracle() -> str:
 
 @query(
     "dedup_minhash_recall_vs_exact",
-    oracle=None,  # patched below — needs both member oracles registered first
+    oracle=_minhash_recall_oracle,
     tags=("dedup", "pipeline", "evaluation"),
 )
 def dedup_minhash_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1533,15 +1533,6 @@ def dedup_minhash_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("matched").cast("double") / F.col("n_exact")).alias("recall"),
         )
     )
-
-
-import dataclasses as _dc2  # noqa: E402
-
-from ..queries import QUERIES as _QREG2  # noqa: E402
-
-_QREG2["dedup_minhash_recall_vs_exact"] = _dc2.replace(
-    _QREG2["dedup_minhash_recall_vs_exact"], oracle=_minhash_recall_oracle()
-)
 
 
 @query(
@@ -1925,7 +1916,7 @@ def _cross_source_overlap_oracle() -> str:
 
 @query(
     "dedup_cross_source_overlap",
-    oracle=_cross_source_overlap_oracle(),
+    oracle=_cross_source_overlap_oracle,
     tags=("dedup", "pipeline", "profiling", "curation"),
 )
 def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

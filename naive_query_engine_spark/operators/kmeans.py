@@ -312,7 +312,7 @@ def _kmeans_oracle(k: int = KMEANS_K, iters: int = KMEANS_ITERS) -> str:
 
 @query(
     "embedding_kmeans_lloyd",
-    oracle=_kmeans_oracle(),
+    oracle=_kmeans_oracle,
     tags=("similarity", "pipeline", "clustering", "iterative"),
 )
 def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +391,7 @@ def _ivf_kmeans_oracle(
 
 @query(
     "similarity_ivf_kmeans_topk",
-    oracle=_ivf_kmeans_oracle(),
+    oracle=_ivf_kmeans_oracle,
     tags=("similarity", "pipeline", "ivf", "topk", "clustering", "iterative"),
 )
 def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,7 +480,7 @@ def _km_recall_oracle() -> str:
 
 @query(
     "similarity_kmeans_recall_at_k",
-    oracle=_km_recall_oracle(),
+    oracle=_km_recall_oracle,
     tags=("similarity", "pipeline", "evaluation", "clustering"),
 )
 def similarity_kmeans_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -535,7 +535,7 @@ def _balanced_sample_oracle(
 
 @query(
     "embedding_cluster_balanced_sample",
-    oracle=_balanced_sample_oracle(),
+    oracle=_balanced_sample_oracle,
     tags=("similarity", "pipeline", "selection", "clustering"),
 )
 def embedding_cluster_balanced_sample(
@@ -623,7 +623,7 @@ def _nprobe_sweep_oracle() -> str:
 
 @query(
     "similarity_ivf_nprobe_sweep",
-    oracle=None,  # patched below (splices three IVF oracles + brute force)
+    oracle=_nprobe_sweep_oracle,
     tags=("similarity", "ivf", "evaluation", "tuning", "clustering"),
 )
 def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,15 +709,6 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionAll(row)
     return out.orderBy("nprobe")
-
-
-import dataclasses as _dck  # noqa: E402
-
-from ..queries import QUERIES as _QK  # noqa: E402
-
-_QK["similarity_ivf_nprobe_sweep"] = _dck.replace(
-    _QK["similarity_ivf_nprobe_sweep"], oracle=_nprobe_sweep_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -816,7 +807,7 @@ def _mutual_knn_ivf_oracle(
 
 @query(
     "similarity_mutual_knn_ivf",
-    oracle=None,  # patched below (splices the exact-graph oracle)
+    oracle=_mutual_knn_ivf_oracle,
     tags=("similarity", "knn", "graph", "ivf", "evaluation", "clustering"),
 )
 def similarity_mutual_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,11 +1090,6 @@ def ivf_mutual_knn_edges(
     return cut_lineage(ivf_edges)
 
 
-_QK["similarity_mutual_knn_ivf"] = _dck.replace(
-    _QK["similarity_mutual_knn_ivf"], oracle=_mutual_knn_ivf_oracle()
-)
-
-
 # ---------------------------------------------------------------------------
 # kNN-graph overlays ON the per-IVF-cell substrate (VERDICT r6 #3) —
 # registered HERE, next to the substrate, because registering them in
@@ -1114,6 +1100,8 @@ _QK["similarity_mutual_knn_ivf"] = _dck.replace(
 # exact-substrate calibration twins in clustering.py run.
 
 from .graph_overlays import (  # noqa: E402
+    kcore_oracle_with,
+    knn_components_oracle_with,
     label_modularity_oracle_with,
     link_prediction_oracle_with,
     modularity_overlay,
@@ -1133,7 +1121,7 @@ def _ivf_knn_with() -> str:
 
 @query(
     "graph_link_prediction_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=lambda: link_prediction_oracle_with(_ivf_knn_with()),
     tags=("similarity", "graph", "link-prediction", "ivf", "curation"),
 )
 def graph_link_prediction_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1157,7 +1145,7 @@ def graph_link_prediction_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_label_modularity_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=lambda: label_modularity_oracle_with(_ivf_knn_with()),
     tags=("graph", "evaluation", "similarity", "ivf", "clustering"),
 )
 def graph_label_modularity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1175,16 +1163,6 @@ def graph_label_modularity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded label domain; the substrate's (cosine DESC, dst) tie rule."""
     lab = t(spark, sf_dir, "embeddings").select("vec_id", "label")
     return modularity_overlay(lab, ivf_mutual_knn_edges(spark, sf_dir))
-
-
-_QK["graph_link_prediction_ivf"] = _dck.replace(
-    _QK["graph_link_prediction_ivf"],
-    oracle=link_prediction_oracle_with(_ivf_knn_with()),
-)
-_QK["graph_label_modularity_ivf"] = _dck.replace(
-    _QK["graph_label_modularity_ivf"],
-    oracle=label_modularity_oracle_with(_ivf_knn_with()),
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1205,7 +1183,7 @@ def _range_search_ivf_oracle() -> str:
 
 @query(
     "similarity_range_search_ivf",
-    oracle=None,  # patched below (splices the per-cell cosine CTEs)
+    oracle=_range_search_ivf_oracle,
     tags=("similarity", "ivf", "range-search", "dedup"),
 )
 def similarity_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,11 +1208,6 @@ def similarity_range_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_cell_cosine_pairs(spark, sf_dir).filter(
         F.col("cosine") >= COSINE_THRESHOLD
     )
-
-
-_QK["similarity_range_search_ivf"] = _dck.replace(
-    _QK["similarity_range_search_ivf"], oracle=_range_search_ivf_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1299,7 +1272,7 @@ def _split_neardup_leakage_ivf_oracle() -> str:
 
 @query(
     "dataset_split_neardup_leakage_ivf",
-    oracle=_split_neardup_leakage_ivf_oracle(),
+    oracle=_split_neardup_leakage_ivf_oracle,
     tags=("pipeline", "split", "dedup", "evaluation", "ivf", "composition"),
 )
 def dataset_split_neardup_leakage_ivf(
@@ -1411,7 +1384,7 @@ def _contamination_check_ivf_oracle() -> str:
 
 @query(
     "dataset_contamination_check_ivf",
-    oracle=_contamination_check_ivf_oracle(),
+    oracle=_contamination_check_ivf_oracle,
     tags=("dedup", "pipeline", "contamination", "ivf", "similarity"),
 )
 def dataset_contamination_check_ivf(
@@ -1453,7 +1426,7 @@ def _leakage_safe_split_ivf_oracle() -> str:
 
 @query(
     "dataset_split_leakage_safe_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=_leakage_safe_split_ivf_oracle,
     tags=("pipeline", "split", "dedup", "clustering", "ivf", "composition"),
 )
 def dataset_split_leakage_safe_ivf(
@@ -1530,7 +1503,7 @@ def _hard_negatives_ivf_oracle() -> str:
 
 @query(
     "embedding_hard_negatives_ivf",
-    oracle=None,  # patched below (splices the per-cell cosine CTEs)
+    oracle=_hard_negatives_ivf_oracle,
     tags=("similarity", "pipeline", "training", "topk", "ivf"),
 )
 def embedding_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1594,15 +1567,6 @@ def embedding_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _patch_hard_negatives_ivf_oracle() -> None:
-    _QK["embedding_hard_negatives_ivf"] = _dck.replace(
-        _QK["embedding_hard_negatives_ivf"], oracle=_hard_negatives_ivf_oracle()
-    )
-
-
-_patch_hard_negatives_ivf_oracle()
-
-
 def _semantic_dedup_ivf_oracle() -> str:
     from .similarity import COSINE_THRESHOLD
 
@@ -1637,7 +1601,7 @@ def _semantic_dedup_ivf_oracle() -> str:
 
 @query(
     "dedup_semantic_ivf",
-    oracle=None,  # patched below (splices the per-cell cosine CTEs)
+    oracle=_semantic_dedup_ivf_oracle,
     tags=("dedup", "pipeline", "clustering", "similarity", "ivf", "iterative"),
 )
 def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,25 +1634,6 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.groupBy(F.col("component").alias("canonical_vec_id")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members")
     )
-
-
-def _patch_semantic_dedup_ivf_oracle() -> None:
-    _QK["dedup_semantic_ivf"] = _dck.replace(
-        _QK["dedup_semantic_ivf"], oracle=_semantic_dedup_ivf_oracle()
-    )
-
-
-_patch_semantic_dedup_ivf_oracle()
-
-
-def _patch_leakage_safe_split_ivf_oracle() -> None:
-    _QK["dataset_split_leakage_safe_ivf"] = _dck.replace(
-        _QK["dataset_split_leakage_safe_ivf"],
-        oracle=_leakage_safe_split_ivf_oracle(),
-    )
-
-
-_patch_leakage_safe_split_ivf_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1802,7 +1747,7 @@ def _centroid_drift_oracle(
 
 @query(
     "embedding_centroid_drift_check",
-    oracle=_centroid_drift_oracle(),
+    oracle=_centroid_drift_oracle,
     tags=("similarity", "ivf", "clustering", "quality", "incremental"),
 )
 def embedding_centroid_drift_check(
@@ -2198,7 +2143,7 @@ def _canonical_roots_oracle(
 
 @query(
     "dedup_ingest_canonical_roots",
-    oracle=_canonical_roots_oracle(),
+    oracle=_canonical_roots_oracle,
     tags=("dedup", "similarity", "ivf", "incremental", "streaming"),
 )
 def dedup_ingest_canonical_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2245,7 +2190,7 @@ def dedup_ingest_canonical_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ingest_admit_gate",
-    oracle=_admit_gate_oracle(),
+    oracle=_admit_gate_oracle,
     tags=("dedup", "similarity", "ivf", "incremental", "streaming"),
 )
 def dedup_ingest_admit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2377,7 +2322,7 @@ def _admit_gate_growk_oracle(iters: int = KMEANS_ITERS) -> str:
 
 @query(
     "dedup_ingest_admit_gate_growk",
-    oracle=None,  # patched below: _lloyd_parts_on is defined later in the module
+    oracle=_admit_gate_growk_oracle,
     tags=("dedup", "similarity", "ivf", "incremental", "streaming"),
 )
 def dedup_ingest_admit_gate_growk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2645,7 +2590,7 @@ def _ivf_repair_oracle(
 
 @query(
     "similarity_ivf_index_repair",
-    oracle=_ivf_repair_oracle(),
+    oracle=_ivf_repair_oracle,
     tags=("similarity", "ivf", "incremental", "iterative", "quality"),
 )
 def similarity_ivf_index_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2782,7 +2727,7 @@ def _neighborhood_function_ivf_oracle() -> str:
 
 @query(
     "graph_neighborhood_function_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=_neighborhood_function_ivf_oracle,
     tags=("graph", "sketch", "similarity", "ivf", "hyperanf"),
 )
 def graph_neighborhood_function_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2848,12 +2793,6 @@ def graph_neighborhood_function_ivf(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
     return level(h1, 1).unionAll(level(h2, 2)).orderBy("hop")
-
-
-_QK["graph_neighborhood_function_ivf"] = _dck.replace(
-    _QK["graph_neighborhood_function_ivf"],
-    oracle=_neighborhood_function_ivf_oracle(),
-)
 
 
 def write_ivf_edge_index(
@@ -3382,7 +3321,7 @@ def _ivf_upsert_oracle(
 
 @query(
     "similarity_ivf_index_upsert",
-    oracle=_ivf_upsert_oracle(),
+    oracle=_ivf_upsert_oracle,
     tags=("similarity", "ivf", "incremental", "iterative", "lakehouse"),
 )
 def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3465,7 +3404,7 @@ def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_knn_components_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=lambda: knn_components_oracle_with(_ivf_knn_with()),
     tags=("similarity", "graph", "clustering", "ivf", "iterative"),
 )
 def graph_knn_components_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3489,18 +3428,6 @@ def graph_knn_components_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return component_size_histogram(
         connected_components(e.select(F.col("vec_id").alias("id")), edges)
     )
-
-
-def _patch_knn_components_ivf_oracle() -> None:
-    from .graph_overlays import knn_components_oracle_with
-
-    _QK["graph_knn_components_ivf"] = _dck.replace(
-        _QK["graph_knn_components_ivf"],
-        oracle=knn_components_oracle_with(_ivf_knn_with()),
-    )
-
-
-_patch_knn_components_ivf_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -3601,7 +3528,7 @@ def _maintenance_tick_oracle(
 
 @query(
     "similarity_ivf_maintenance_tick",
-    oracle=_maintenance_tick_oracle(),
+    oracle=_maintenance_tick_oracle,
     tags=("dedup", "similarity", "ivf", "incremental", "streaming"),
 )
 def similarity_ivf_maintenance_tick(
@@ -3691,7 +3618,7 @@ def similarity_ivf_maintenance_tick(
 
 @query(
     "streaming_tick_batch_equivalence",
-    oracle=_maintenance_tick_oracle(),
+    oracle=_maintenance_tick_oracle,
     tags=("streaming", "dedup", "similarity", "ivf", "incremental"),
 )
 def streaming_tick_batch_equivalence(
@@ -3820,7 +3747,7 @@ def streaming_tick_batch_equivalence(
 
 @query(
     "graph_kcore_ivf",
-    oracle=None,  # patched below (splices the per-cell substrate CTEs)
+    oracle=lambda: kcore_oracle_with(_ivf_knn_with()),
     tags=("similarity", "graph", "ivf", "iterative", "quality"),
 )
 def graph_kcore_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3848,25 +3775,3 @@ def graph_kcore_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcore_overlay(
         ivf_mutual_knn_edges(spark, sf_dir), cut=cut_lineage
     )
-
-
-def _patch_kcore_ivf_oracle() -> None:
-    from .graph_overlays import kcore_oracle_with
-
-    _QK["graph_kcore_ivf"] = _dck.replace(
-        _QK["graph_kcore_ivf"], oracle=kcore_oracle_with(_ivf_knn_with())
-    )
-
-
-_patch_kcore_ivf_oracle()
-
-
-def _patch_admit_gate_growk_oracle() -> None:
-    # the oracle builder needs _lloyd_parts_on, defined below the query
-    _QK["dedup_ingest_admit_gate_growk"] = _dck.replace(
-        _QK["dedup_ingest_admit_gate_growk"],
-        oracle=_admit_gate_growk_oracle(),
-    )
-
-
-_patch_admit_gate_growk_oracle()

@@ -916,7 +916,7 @@ def _curve_compare_oracle() -> str:
 
 @query(
     "layout_curve_locality_compare",
-    oracle=None,  # patched below (generated 16-level Hilbert chain)
+    oracle=_curve_compare_oracle,
     tags=("layout", "zorder", "hilbert", "lakehouse"),
 )
 def layout_curve_locality_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,16 +975,3 @@ def layout_curve_locality_compare(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("curve")
     )
-
-
-def _patch_curve_compare_oracle() -> None:
-    import dataclasses as _dcl
-
-    from ..queries import QUERIES as _Q
-
-    _Q["layout_curve_locality_compare"] = _dcl.replace(
-        _Q["layout_curve_locality_compare"], oracle=_curve_compare_oracle()
-    )
-
-
-_patch_curve_compare_oracle()

@@ -134,7 +134,7 @@ def _curation_oracle() -> str:
 
 @query(
     "pipeline_corpus_curation",
-    oracle=_curation_oracle(),
+    oracle=_curation_oracle,
     tags=("pipeline", "text", "dedup", "composition"),
 )
 def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +299,7 @@ def curation_partials(batch: DataFrame) -> DataFrame:
 
 @query(
     "pipeline_incremental_curation",
-    oracle=_curation_oracle(),
+    oracle=_curation_oracle,
     tags=("pipeline", "text", "dedup", "composition", "incremental"),
 )
 def pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,7 +430,7 @@ def _cascade_oracle() -> str:
 
 @query(
     "pipeline_dedup_cascade",
-    oracle=_cascade_oracle(),
+    oracle=_cascade_oracle,
     tags=("pipeline", "dedup", "composition", "cascade"),
 )
 def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,7 +664,7 @@ def _uncertainty_sample_oracle() -> str:
 
 @query(
     "dataset_uncertainty_sample",
-    oracle=None,  # patched below (splices the scorer oracle)
+    oracle=_uncertainty_sample_oracle,
     tags=("pipeline", "curation", "active-learning", "sampling"),
 )
 def dataset_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,16 +693,3 @@ def dataset_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("margin", "doc_id")
         .limit(UNCERTAINTY_K)
     )
-
-
-def _patch_uncertainty_oracle() -> None:
-    import dataclasses as _dcp
-
-    from ..queries import QUERIES as _Q
-
-    _Q["dataset_uncertainty_sample"] = _dcp.replace(
-        _Q["dataset_uncertainty_sample"], oracle=_uncertainty_sample_oracle()
-    )
-
-
-_patch_uncertainty_oracle()

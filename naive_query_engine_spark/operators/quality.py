@@ -477,7 +477,7 @@ def _curriculum_oracle() -> str:
 
 @query(
     "dataset_curriculum_bins",
-    oracle=None,  # patched below (needs pipeline.MODEL_WEIGHTS at import time)
+    oracle=_curriculum_oracle,
     tags=("pipeline", "quality", "curriculum", "window"),
 )
 def dataset_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,15 +516,6 @@ def dataset_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("score").cast("long").alias("max_score"),
         )
     )
-
-
-import dataclasses as _dc  # noqa: E402
-
-from ..queries import QUERIES as _QR  # noqa: E402
-
-_QR["dataset_curriculum_bins"] = _dc.replace(
-    _QR["dataset_curriculum_bins"], oracle=_curriculum_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1154,7 +1145,7 @@ def _dsir_oracle() -> str:
 
 @query(
     "dataset_dsir_importance_weights",
-    oracle=None,  # patched below (assembled from the DSIR_* constants)
+    oracle=_dsir_oracle,
     tags=("dataset", "pipeline", "selection", "text"),
 )
 def dataset_dsir_importance_weights(
@@ -1312,11 +1303,6 @@ def dataset_dsir_importance_weights(
         )
         .orderBy("lang")
     )
-
-
-_QR["dataset_dsir_importance_weights"] = _dc.replace(
-    _QR["dataset_dsir_importance_weights"], oracle=_dsir_oracle()
-)
 
 
 # ---------------------------------------------------------------------------

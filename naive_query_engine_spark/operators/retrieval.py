@@ -61,7 +61,7 @@ def _fusion_oracle() -> str:
 
 @query(
     "retrieval_rrf_fusion",
-    oracle=_fusion_oracle(),
+    oracle=_fusion_oracle,
     tags=("retrieval", "hybrid", "rrf", "pipeline", "topk"),
 )
 def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,7 +166,7 @@ def _eval_oracle() -> str:
 
 @query(
     "retrieval_eval_mrr_ndcg",
-    oracle=_eval_oracle(),
+    oracle=_eval_oracle,
     tags=("retrieval", "evaluation", "mrr", "ndcg", "pipeline"),
 )
 def retrieval_eval_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,7 +351,7 @@ def _mmr_oracle() -> str:
 
 @query(
     "retrieval_mmr_diversify",
-    oracle=_mmr_oracle(),
+    oracle=_mmr_oracle,
     tags=("retrieval", "mmr", "diversity", "rerank", "pipeline"),
 )
 def retrieval_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..queries import QUERIES as _Q
 from ..queries import cut_lineage, query, t
 from ..substrates import substrate
 
@@ -417,7 +418,8 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "similarity_topk_vectorized",
-    oracle=None,  # patched below to reuse the bruteforce oracle (must hash-match)
+    # must hash-match the JVM brute-force path, so it shares that oracle
+    oracle=lambda: _Q["similarity_topk_bruteforce"].oracle,
     tags=("similarity", "pipeline", "topk", "pandas-udf"),
 )
 def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,16 +496,6 @@ def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= TOP_K)
     )
-
-
-# the vectorized path must hash-match the JVM brute-force path → same oracle
-import dataclasses as _dc  # noqa: E402
-
-from ..queries import QUERIES as _Q  # noqa: E402
-
-_Q["similarity_topk_vectorized"] = _dc.replace(
-    _Q["similarity_topk_vectorized"], oracle=_Q["similarity_topk_bruteforce"].oracle
-)
 
 
 @query(
@@ -894,7 +886,7 @@ def _recall_oracle() -> str:
 
 @query(
     "similarity_recall_at_k",
-    oracle=None,  # patched below — needs both member oracles registered first
+    oracle=_recall_oracle,
     tags=("similarity", "pipeline", "evaluation"),
 )
 def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -915,11 +907,6 @@ def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total",
         (F.col("matched").cast("double") / F.col("total")).alias("recall_at_k"),
     )
-
-
-_Q["similarity_recall_at_k"] = _dc.replace(
-    _Q["similarity_recall_at_k"], oracle=_recall_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1629,7 +1616,7 @@ def _top_pc_oracle() -> str:
 
 @query(
     "embedding_top_pc_power_iteration",
-    oracle=_top_pc_oracle(),
+    oracle=_top_pc_oracle,
     tags=("similarity", "pipeline", "linear-algebra", "iterative", "pca"),
 )
 def embedding_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2103,7 +2090,7 @@ def _mrl_oracle() -> str:
 
 @query(
     "embedding_matryoshka_prefix_recall",
-    oracle=None,  # patched below (assembled from MRL_PREFIXES)
+    oracle=_mrl_oracle,
     tags=("similarity", "embedding", "evaluation", "compression"),
 )
 def embedding_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2203,11 +2190,6 @@ def embedding_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-_Q["embedding_matryoshka_prefix_recall"] = _dc.replace(
-    _Q["embedding_matryoshka_prefix_recall"], oracle=_mrl_oracle()
-)
-
-
 # ---------------------------------------------------------------------------
 # TwoNN intrinsic-dimension estimate (Facco et al. 2017) — the manifold
 # probe the mutual-kNN docstring promises
@@ -2259,7 +2241,7 @@ def _twonn_oracle() -> str:
 
 @query(
     "embedding_intrinsic_dimension_twonn",
-    oracle=_twonn_oracle(),
+    oracle=_twonn_oracle,
     tags=("similarity", "embedding", "evaluation", "manifold", "pandas-udf"),
 )
 def embedding_intrinsic_dimension_twonn(
@@ -2464,7 +2446,7 @@ def _kcenter_oracle(t_picks: int = KCENTER_T) -> str:
 
 @query(
     "embedding_kcenter_coreset",
-    oracle=_kcenter_oracle(),
+    oracle=_kcenter_oracle,
     tags=("similarity", "dataset", "sampling", "iterative", "pipeline"),
 )
 def embedding_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2762,7 +2744,7 @@ def _graph_ann_oracle() -> str:
 
 @query(
     "similarity_graph_ann_beam",
-    oracle=_graph_ann_oracle(),
+    oracle=_graph_ann_oracle,
     tags=("similarity", "ann", "graph", "beam", "pipeline"),
 )
 def similarity_graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:

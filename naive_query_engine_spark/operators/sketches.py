@@ -1253,7 +1253,7 @@ def _bloom_verdicts(batch_docs: DataFrame, bloom: DataFrame, corpus_g: DataFrame
 
 @query(
     "dedup_bloom_ingest_prefilter",
-    oracle=_bloom_prefilter_oracle(),
+    oracle=_bloom_prefilter_oracle,
     tags=("sketch", "dedup", "ingest", "prefilter", "bloom"),
 )
 def dedup_bloom_ingest_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,7 +1293,7 @@ def dedup_bloom_ingest_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_bloom_admit_equivalence",
-    oracle=_bloom_prefilter_oracle(),
+    oracle=_bloom_prefilter_oracle,
     tags=("streaming", "sketch", "dedup", "ingest", "bloom"),
 )
 def streaming_bloom_admit_equivalence(

@@ -198,7 +198,7 @@ def _lang_id_oracle() -> str:
     """
 
 
-@query("text_lang_id", oracle=_lang_id_oracle(), tags=("text", "pipeline", "langid"))
+@query("text_lang_id", oracle=_lang_id_oracle, tags=("text", "pipeline", "langid"))
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID via function-word n-gram hits.  Output carries
     the dataset's label column for accuracy eyeballing; the check grades
@@ -1089,7 +1089,7 @@ def _bpe_encode_oracle(n_iters: int = BPE_N_ITERS) -> str:
 
 @query(
     "text_bpe_encode",
-    oracle=_bpe_encode_oracle(),
+    oracle=_bpe_encode_oracle,
     tags=("text", "pipeline", "tokenizer", "iterative"),
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,7 +1181,7 @@ def _bpe_train_oracle(n_iters: int = BPE_N_ITERS, top: int = BPE_ITER_TOP) -> st
 
 @query(
     "text_bpe_train_8iters",
-    oracle=_bpe_train_oracle(),
+    oracle=_bpe_train_oracle,
     tags=("text", "pipeline", "tokenizer", "iterative"),
 )
 def text_bpe_train_8iters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1417,7 +1417,7 @@ def _langid_confusion_oracle() -> str:
 
 @query(
     "text_langid_confusion",
-    oracle=_langid_confusion_oracle(),
+    oracle=_langid_confusion_oracle,
     tags=("text", "langid", "evaluation", "quality"),
 )
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2176,7 +2176,7 @@ def _rule_overlap_oracle() -> str:
 
 @query(
     "text_quality_rule_overlap",
-    oracle=_rule_overlap_oracle(),
+    oracle=_rule_overlap_oracle,
     tags=("text", "quality", "curation", "audit"),
 )
 def text_quality_rule_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

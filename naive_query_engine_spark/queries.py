@@ -30,22 +30,38 @@ from pyspark.sql import functions as F
 # registry plumbing
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+OracleSrc = str | Callable[[], str]
 
 
-@dataclass(frozen=True)
+@dataclass
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
+    oracle_src: OracleSrc
     tags: tuple[str, ...]
     doc: str = ""
+
+    @property
+    def oracle(self) -> str:
+        """ANSI SQL for DuckDB.  A function oracle runs on the first read
+        (every module has registered by then, whatever the import order)
+        and its text replaces it."""
+        if callable(self.oracle_src):
+            self.oracle_src = self.oracle_src()
+        return self.oracle_src
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
-    """Register a named query. ``fn(spark, sf_dir) -> DataFrame``."""
+def query(name: str, oracle: OracleSrc, tags: tuple[str, ...] = ()):
+    """Register a named query. ``fn(spark, sf_dir) -> DataFrame``.
+
+    ``oracle`` is the DuckDB SQL, or a zero-argument function returning
+    it for an oracle spliced from other queries' oracles or from names
+    defined further down the module (a lambda defers the name lookup)."""
+    if oracle is None:
+        raise ValueError(f"query {name!r} declares no oracle")
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
@@ -54,7 +70,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc:
             # the registered one and only the rotation-completeness test
             # noticed) — fail loudly at import instead
             raise ValueError(f"query {name!r} is already registered")
-        QUERIES[name] = QuerySpec(name, fn, oracle, tuple(tags), doc or (fn.__doc__ or ""))
+        QUERIES[name] = QuerySpec(name, fn, oracle, tuple(tags), fn.__doc__ or "")
         return fn
 
     return deco
@@ -143,17 +159,22 @@ def cut_lineage(df: DataFrame) -> DataFrame:
 
 
 def release_cut(df: DataFrame) -> None:
-    """Free the blocks behind ``df``, a frame :func:`cut_lineage` returned,
-    once nothing reads it any more (non-blocking).  Only the default
-    ``localCheckpoint`` cut holds blocks: the lazy no-op and the reliable
-    checkpoint (its files live in the checkpoint dir) have none here."""
+    """Free the blocks behind ``df``, a frame :func:`cut_lineage` returned
+    or a projection of one, once nothing reads it any more (non-blocking).
+    Any other plan is left alone.  Only the default ``localCheckpoint``
+    cut holds blocks: the lazy no-op and the reliable checkpoint (its
+    files live in the checkpoint dir) have none here."""
     import os
 
     if os.environ.get("SPARK_GRAFT_LAZY_CUTS") or os.environ.get(
         "SPARK_GRAFT_RELIABLE_CHECKPOINT"
     ):
         return
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def floordiv_col(x: Column, d: Column) -> Column:

@@ -4,8 +4,8 @@ maintained tables and indexes.
 
 An entry is keyed ``(qualified function name, applicationId, sf_dir,
 *params)`` with defaults applied.  Reuse changes no results: a substrate
-is a pure function of its key.  :func:`clear` drops entries and
-unpersists their frames.
+is a pure function of its key.  :func:`clear` drops entries, unpersists
+their frames and frees the blocks of their lineage cuts.
 """
 
 from __future__ import annotations
@@ -45,7 +45,12 @@ def substrate(build):
 
 def clear(*fns) -> None:
     """Drop the entries of the given substrates, or of all when none are
-    given, unpersisting every DataFrame an entry held."""
+    given, unpersisting every DataFrame an entry held and releasing the
+    ``cut_lineage`` blocks it reads.  A released cut cannot be recomputed,
+    so an entry built lazily on a cleared cut (``ivf_corpus_assignment``
+    on ``cached_cut_qtable``) must be cleared with it."""
+    from .queries import release_cut
+
     names = {_name(fn) for fn in fns}
     cache = _SUBSTRATE_CACHE
     for key in [k for k in cache if not names or k[0] in names]:
@@ -53,3 +58,4 @@ def clear(*fns) -> None:
         for df in value if isinstance(value, tuple) else (value,):
             if isinstance(df, DataFrame):
                 df.unpersist()
+                release_cut(df)

@@ -4,7 +4,9 @@ silently shrink the window, so pin its contract)."""
 
 from __future__ import annotations
 
-from naive_query_engine_spark.queries import QUERIES
+import pytest
+
+from naive_query_engine_spark.queries import QUERIES, query
 from naive_query_engine_spark.rotation import (
     DRIVER_SAMPLED,
     RESAMPLE_SLOTS,
@@ -83,3 +85,22 @@ def test_resample_slots_are_deterministic_oldest_first():
 def test_rotation_has_no_duplicates():
     assert len(ROTATION) == len(set(ROTATION))
     assert not (set(ROTATION) & set(SENTINELS))
+
+
+def test_registration_requires_an_oracle():
+    with pytest.raises(TypeError):
+        query("x", tags=())
+    with pytest.raises(ValueError, match="declares no oracle"):
+        query("x", oracle=None, tags=())
+    assert "x" not in QUERIES
+
+
+def test_every_registered_oracle_is_sql_text():
+    for name, spec in QUERIES.items():
+        assert isinstance(spec.oracle, str) and spec.oracle.strip(), name
+
+
+def test_reading_a_built_oracle_registers_nothing():
+    names = list(QUERIES)
+    assert "SELECT" in QUERIES["dedup_ingest_admit_gate_growk"].oracle
+    assert list(QUERIES) == names

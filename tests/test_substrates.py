@@ -1,7 +1,7 @@
 """The session-substrate registry (`naive_query_engine_spark.substrates`):
-keying, reuse, and the `clear` that drops entries and unpersists their
-frames.  Keying tests use a fake ``spark`` namespace, so they need no
-corpus and no JVM."""
+keying, reuse, and the `clear` that drops entries, unpersists their
+frames and releases their lineage cuts.  Keying tests use a fake
+``spark`` namespace, so they need no corpus and no JVM."""
 
 from __future__ import annotations
 
@@ -113,6 +113,33 @@ def _persistent_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def _chain(spark, n=6):
+    vertices = spark.range(n)
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
+    return vertices, edges
+
+
+@pytest.mark.parametrize("shape", ["direct_cut", "components"])
+def test_clear_releases_cut_backed_values(spark, cache, shape):
+    """A substrate whose value is a lineage cut, or a projection of one
+    (``connected_components`` labels), holds checkpoint blocks that
+    ``unpersist`` alone does not free; ``clear`` releases them."""
+    from naive_query_engine_spark.operators.clustering import connected_components
+    from naive_query_engine_spark.queries import cut_lineage
+
+    @substrate
+    def cut(spark, sf_dir):
+        if shape == "direct_cut":
+            return cut_lineage(spark.range(5).selectExpr("id", "id * 2 AS v"))
+        return connected_components(*_chain(spark))
+
+    before = _persistent_rdds(spark)
+    cut(spark, "sf")
+    assert len(_persistent_rdds(spark) - before) == 1
+    substrates.clear(cut)
+    assert _persistent_rdds(spark) <= before
+
+
 def _cut_rdd_id(df) -> int:
     """Id of the checkpointed RDD that the (projected) cut frame reads."""
     return df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().id()
@@ -127,8 +154,7 @@ def test_connected_components_releases_its_edge_frame(spark, max_iter):
     keeps none."""
     from naive_query_engine_spark.operators.clustering import connected_components
 
-    vertices = spark.range(6)
-    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "a long, b long")
+    vertices, edges = _chain(spark)
     before = _persistent_rdds(spark)
     if max_iter == 1:  # the first round changes labels, so one is too few
         with pytest.raises(RuntimeError, match="not converged"):

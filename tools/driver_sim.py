@@ -6,7 +6,8 @@ SparkSession (none of our tuned conf), runs each ``queries()`` entry at
 sf0.01 and compares with ``oracle_sql()`` (columns sorted by name, rows
 sorted, values hashed).  This script reproduces that from a NEUTRAL cwd so
 conf-dependent or pickling-dependent failures surface before the round
-gate does.
+gate does; the comparison is the oracle suite's own
+(``tests.conftest.assert_frames_match``).
 
 Usage (cwd does not matter; /tmp is the honest choice):
 
@@ -25,26 +26,11 @@ import sys
 import time
 
 import duckdb
-import pandas as pd
 
 ENTRY = "/root/repo/__spark_entry__.py"
 sys.path.insert(0, os.path.dirname(ENTRY))
 from naive_query_engine_spark.sources import TPCH_TABLES as TABLES  # noqa: E402
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            df[c] = pd.to_datetime(s).dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-        elif s.dtype == object:
-            df[c] = s.map(
-                lambda v: v.hex()
-                if isinstance(v, (bytes, bytearray))
-                else ("<NULL>" if v is None else str(v))
-            )
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+from tests.conftest import assert_frames_match  # noqa: E402
 
 
 def main() -> int:
@@ -75,32 +61,10 @@ def main() -> int:
         t0 = time.time()
         try:
             spark_pdf = queries[name](spark, args.sf).toPandas()
-            if name not in oracles:
-                status = f"PASS (rows-only, {len(spark_pdf)} rows)"
-                n_pass += 1
-            else:
-                oracle_pdf = con.execute(oracles[name]).fetchdf()
-                if len(spark_pdf) != len(oracle_pdf):
-                    raise AssertionError(
-                        f"rows {len(spark_pdf)} vs {len(oracle_pdf)}"
-                    )
-                if sorted(spark_pdf.columns) != sorted(oracle_pdf.columns):
-                    raise AssertionError(
-                        f"cols {sorted(spark_pdf.columns)} vs {sorted(oracle_pdf.columns)}"
-                    )
-                a, b = normalize(spark_pdf), normalize(oracle_pdf)
-                # the driver compares schemas too: dtype KINDS must agree
-                for c in a.columns:
-                    ka, kb = a[c].dtype.kind, b[c].dtype.kind
-                    if ka != kb and not {ka, kb} <= {"i", "u"}:
-                        raise AssertionError(
-                            f"{c}: dtype kind {a[c].dtype} (spark) vs {b[c].dtype} (oracle)"
-                        )
-                pd.testing.assert_frame_equal(
-                    a, b, check_dtype=False, check_exact=True, obj=name
-                )
-                status = f"PASS ({len(spark_pdf)} rows)"
-                n_pass += 1
+            oracle_pdf = con.execute(oracles[name]).fetchdf()
+            assert_frames_match(spark_pdf, oracle_pdf, name)
+            status = f"PASS ({len(spark_pdf)} rows)"
+            n_pass += 1
         except Exception as exc:  # noqa: BLE001 — report and continue
             status = f"FAIL: {type(exc).__name__}: {str(exc)[:200]}"
             n_fail += 1

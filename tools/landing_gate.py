@@ -54,9 +54,6 @@ import duckdb
 from naive_query_engine_spark.queries import QUERIES
 from naive_query_engine_spark.sources import TPCH_TABLES
 spec = QUERIES[{name!r}]
-if spec.oracle is None:
-    print("SKIP no-oracle")
-    sys.exit(0)
 con = duckdb.connect()
 con.execute("SET memory_limit='{mem}'")
 for t in TPCH_TABLES:
