@@ -34,3 +34,11 @@ def register_all() -> None:
         temporal,
         text,
     )
+
+
+# Importing any operator module first loads the whole registry from here,
+# in ``queries``' own order, before that module's body runs: otherwise
+# ``queries`` would import every operator while the first one is still
+# half-built, and a sibling importing names from it (kmeans from
+# similarity, pipeline from text) would fail.
+from .. import queries  # noqa: E402,F401

@@ -5,20 +5,18 @@ document per duplicate *group* needs the transitive closure — connected
 components.  This is the iterative-algorithm case the reference cannot
 express at all and Spark has no single built-in for:
 
-- Spark path: **label propagation to fixpoint** — each iteration joins the
-  current labels across the (symmetrized) edge set and takes the min; the
-  driver loop stops when an iteration changes nothing.  Per iteration: one
-  shuffle join keyed by vertex; iterations ≤ graph diameter (near-dup
-  clusters are shallow).  ``localCheckpoint`` truncates the lineage so the
-  plan doesn't grow with iterations — the standard Spark idiom for
-  iterative graph algorithms at scale.
+- Spark path: **rounds of partition-local union-find** (Kiveris et al.,
+  *Connected Components in MapReduce and Beyond*, SoCC 2014).  Each round
+  is one keyed shuffle, one pandas union-find per partition and one
+  lineage cut; a component whose members all landed in one partition is
+  finished there, so a graph that fits one partition takes one round.
+  The rest continue as star edges until the stars stop changing.
 - Oracle path: a recursive CTE computing reachability (DuckDB) — an
   independent formulation agreeing on the result.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,129 +29,142 @@ from .shingles_sql import (
 )
 
 
+def union_by_min_kernel():
+    """Return ``union_by_min(a, b) -> {x: root}``: exact union-find over
+    the pairs ``zip(a, b)``, for every x in either sequence.  Union by
+    min attaches the larger root under the smaller, so every root is
+    the minimum of its component (ids only need ``<``).  A factory, so
+    the kernel is a local function and pickles by value inside a UDF
+    closure: executors never need this package importable."""
+
+    def union_by_min(a, b):
+        parent = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for x, y in zip(a, b):
+            parent.setdefault(x, x)
+            parent.setdefault(y, y)
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                lo, hi = (rx, ry) if rx < ry else (ry, rx)
+                parent[hi] = lo
+        return {x: find(x) for x in parent}
+
+    return union_by_min
+
+
 def connected_components(
     vertices: DataFrame,  # (id)
-    edges: DataFrame,  # (a, b) undirected
+    edges: DataFrame,  # (a, b) undirected, both endpoints in vertices
     max_iter: int = 25,
 ) -> DataFrame:
     """(id, component) with component = min vertex id reachable.
 
-    Min-label propagation, HYBRID-accelerated (r13, guide §1.2 "the
-    distributed algorithm"): the first two rounds are the plain
-    neighbor-min update (one join each — near-dup graphs usually
-    converge here: the sf0.1 jaccard doc graph needs 2 rounds, and the
-    accelerated round's extra joins cost ~3× for nothing on it); from
-    round 3 each round applies
-    ``label(v) = min(label(v), min_u label(u), label(label(v)))``
-    TWICE — the plain term plus one POINTER JUMP per substep.  The
-    invariant (a node's label is always the id of some node in its
-    component, monotone nonincreasing) is preserved — ``label(v)``
-    names a reachable node, so anything that node already reached is
-    reachable too — and any state stable under the combined update is
-    stable under plain neighbor-min (the combined min includes that
-    term), so the fixpoint is unchanged: the component's minimum id.
-    On deep graphs information flows along shortcut pointers as well as
-    edges: the sf0.1 semantic graph converges in 17 plain rounds but 6
-    hybrid rounds.
+    Rounds of partition-local union-find.  A round keys every edge by
+    both endpoints (and, in the first round, every vertex by itself),
+    runs one ``repartition`` on that key with no partition count, so
+    AQE coalescing puts a small graph in one partition, and runs a
+    union-find over each partition.  A local component is CLOSED when
+    all its members are keys of that partition: every edge touching a
+    member was routed there, so it is a whole component of the graph
+    and its root, the local minimum, labels its members for good.  An
+    OPEN component goes on as star edges (root, member), which connect
+    exactly what its edges connected.  It CHANGED unless every one of
+    its edges already touches its root.  When no open component
+    changed, every open component is a star around its minimum (two
+    centres cannot be adjacent: each would be the other's smaller
+    neighbour), so each open vertex's tentative label, the root of its
+    local component, is final too.
 
-    The convergence probe rides the checkpointed frame: the changed
-    flag is computed as a column BEFORE the lineage cut, so the check
-    is a filter+limit over materialized rows instead of the old
-    new-vs-old self-join job."""
-    sym = (
-        edges.select(F.col("a"), F.col("b"))
-        .unionAll(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        # reused every iteration; near-dup edge sets are candidate-bounded
-        # but still corpus-shaped — spill, don't OOM
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    Each vertex is a key in exactly one partition and gets one label
+    row there per round, carried through later rounds as it is, so the
+    result is a filter of the last round's cut.  Earlier cuts are
+    released once the next one has materialized."""
+    id_type = vertices.schema["id"].dataType
+    schema = f"a {id_type.simpleString()}, b {id_type.simpleString()}, k tinyint"
+    # row kinds: final and tentative labels (id, component), then star
+    # edges (root, member) of open components, unchanged or changed
+    DONE, LABEL, EDGE, CHANGED = range(4)
+    union_by_min = union_by_min_kernel()
+
+    def uf_round(batches):
+        import pandas as pd
+
+        parts = list(batches)
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        done = pdf[pdf["k"] == DONE]
+        live = pdf[pdf["k"] != DONE]
+        a, b = live["a"].tolist(), live["b"].tolist()
+        keys = set(live["key"].tolist())
+        root = union_by_min(a, b)
+        open_roots = {root[m] for m in root if m not in keys}
+        changed = set()
+        for x, y in zip(a, b):
+            if x != y and root[x] not in (x, y):
+                changed.add(root[x])
+        out = []
+        for m, r in root.items():
+            if r not in open_roots:
+                out.append((m, r, DONE))
+                continue
+            if m in keys:
+                out.append((m, r, LABEL))
+            if m != r:
+                out.append((r, m, CHANGED if r in changed else EDGE))
+        out = pd.DataFrame(out, columns=["a", "b", "k"])
+        yield pd.concat([done[["a", "b", "k"]], out], ignore_index=True).astype(
+            {"k": "int8"}
+        )
+
+    rows = vertices.select(
+        F.col("id").alias("a"), F.col("id").alias("b"), F.lit(EDGE).cast("byte").alias("k")
+    ).unionAll(
+        edges.select(
+            F.col("a").cast(id_type),
+            F.col("b").cast(id_type),
+            F.lit(EDGE).cast("byte").alias("k"),
+        )
     )
-    labels = vertices.select(F.col("id"), F.col("id").alias("component"))
-
-    def _one_step(lab: DataFrame) -> DataFrame:
-        """One combined update over (id, component): neighbor-min + one
-        pointer jump.  c1 is always a live vertex id (labels only ever
-        hold vertex ids), so the left joins' null arms never fire for
-        real graphs; coalesce keeps the expressions total regardless."""
-        neighbor_min = (
-            sym.join(lab, sym.b == lab.id)
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        prop = lab.join(neighbor_min, "id", "left").select(
-            "id",
-            F.least(
-                F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-            ).alias("c1"),
-        )
-        ptr = lab.select(
-            F.col("id").alias("p_id"), F.col("component").alias("p_component")
-        )
-        return prop.join(ptr, prop.c1 == ptr.p_id, "left").select(
-            "id",
-            F.least(
-                F.col("c1"), F.coalesce(F.col("p_component"), F.col("c1"))
-            ).alias("component"),
-        )
-
-    # the returned labels come from an eager cut, so nothing reads sym
-    # after the fixpoint: release it whether it converges or raises.  Each
-    # round's cut is read only by the next round, so it is released once
-    # the next round's cut has materialized; the last one backs the result
-    prev_cut = None
+    # a label row is keyed by its id; an edge by both endpoints
+    key = F.explode(
+        F.when(F.col("k") == DONE, F.array("a")).otherwise(F.array_distinct(F.array("a", "b")))
+    )
+    cut = None
     try:
-        for r in range(max_iter):
-            if r < 2:
-                # plain round: one neighbor-min join; old and new labels live
-                # in the same row, so the changed flag is a free projection
-                neighbor_min = (
-                    sym.join(labels, sym.b == labels.id)
-                    .groupBy(F.col("a").alias("id"))
-                    .agg(F.min("component").alias("nbr_component"))
+        for _ in range(max_iter):
+            stepped = (
+                rows.select(key.alias("key"), "a", "b", "k")
+                .repartition("key")
+                .mapInPandas(uf_round, schema)
+            )
+            new_cut = cut_lineage(stepped)
+            if cut is not None:
+                release_cut(cut)
+            cut = new_cut
+            if cut.filter(F.col("k") == CHANGED).isEmpty():
+                labels = cut.filter(F.col("k") <= LABEL).select(
+                    F.col("a").alias("id"), F.col("b").alias("component")
                 )
-                newc = F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                )
-                stepped = labels.join(neighbor_min, "id", "left").select(
-                    "id",
-                    newc.alias("component"),
-                    (newc != F.col("component")).alias("chg"),
-                )
-            else:
-                # accelerated round: two pointer-jumping substeps before the
-                # cut — the per-round cost is one eager lineage-cut job + one
-                # tiny convergence count regardless of plan depth at these
-                # label-frame sizes, so folding two updates into each round
-                # halves the round count for the same job bill
-                old = labels.select("id", F.col("component").alias("old_component"))
-                stepped = (
-                    _one_step(_one_step(labels))
-                    .join(old, "id")
-                    .select(
-                        "id",
-                        "component",
-                        (F.col("component") != F.col("old_component")).alias("chg"),
-                    )
-                )
-            new_labels = stepped.transform(cut_lineage)
-            if prev_cut is not None:
-                release_cut(prev_cut)
-            prev_cut = new_labels
-            changed = new_labels.filter(F.col("chg")).limit(1).count()
-            labels = new_labels.select("id", "component")
-            if changed == 0:
-                prev_cut = None  # kept: it backs the returned labels
+                cut = None  # kept: it backs the returned labels
                 return labels
-        # silent non-convergence would emit wrong (split) components for
-        # any cluster whose diameter exceeds max_iter — fail loudly instead
+            # tentative labels are rebuilt by the next round
+            rows = cut.filter(F.col("k") != LABEL)
+        # silent non-convergence would emit wrong (split) components —
+        # fail loudly instead
         raise RuntimeError(
-            f"connected_components: not converged after {max_iter} iterations "
-            "(a component's diameter exceeds max_iter); raise max_iter"
+            f"connected_components: not converged after {max_iter} rounds; "
+            "raise max_iter"
         )
     finally:
-        sym.unpersist()
-        if prev_cut is not None:
-            release_cut(prev_cut)
+        if cut is not None:
+            release_cut(cut)
 
 
 # ---------------------------------------------------------------------------
@@ -195,7 +206,7 @@ def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached ``connected_components`` labels (id, component)
     over (all doc_ids, :func:`near_dup_edges`).  EAGER on first build
-    (the fixpoint runs its convergence jobs), like the edge frame's
+    (each union-find round cuts its lineage), like the edge frame's
     first materialization.  The cluster-assignment table of the six
     component consumers; a pure function of the edge frame."""
     d = t(spark, sf_dir, "documents")
@@ -322,8 +333,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: edge generation is the blocked matmul (or swap in the
     LSH-bucketed candidates for sub-quadratic); clustering is the same
-    label-propagation fixpoint as dedup_connected_components (one keyed
-    shuffle per iteration, lineage truncated via localCheckpoint)."""
+    partition-local union-find as dedup_connected_components (one keyed
+    shuffle and one lineage cut per round; one round when the graph fits
+    one partition)."""
     from .similarity import _qtable, cached_blocked_frame, cosine_block_pairs
 
     qt = _qtable(spark, sf_dir)
@@ -505,8 +517,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank flows both ways.  Top-``PR_TOPN`` nodes by rank after
     ``PR_ITERS`` synchronous iterations — the canonical iterative
     link-analysis workload (the reference engine has no iteration at
-    all; in Spark it is a driver loop of shuffle joins, the same
-    fixpoint idiom as :func:`connected_components`).
+    all; in Spark it is a driver loop of shuffle joins with a lineage
+    cut per round).
 
     Exact integer micro-ranks (see :func:`pagerank_int`) keep both
     engines bit-identical — no float accumulation anywhere."""
@@ -952,7 +964,7 @@ def profile_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate cluster — the number a curation run reports per feed
     (a crawler stuck in a template farm shows up as one source's dup_rate
     spiking, long before eyeballs reach the documents).  Components come
-    from the same Jaccard-edge label propagation as
+    from the same Jaccard-edge connected components as
     ``dedup_connected_components``; a doc counts as duplicated when its
     cluster has >1 member.  One extra join + per-source aggregation on
     top of machinery already proven — the per-source rate is exact, not
@@ -1440,8 +1452,8 @@ def pipeline_dedup_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFra
     up-sampled).
 
     Scale shape: everything corpus-sized is the proven components
-    machinery (session-cached Jaccard edges → label-propagation
-    fixpoint); this adds one source-keyed aggregation and a 1-row
+    machinery (session-cached Jaccard edges → partition-local
+    union-find components); this adds one source-keyed aggregation and a 1-row
     totals broadcast.  Determinism: exact integer masses and integer
     floor division for the budget; rates are single double divisions;
     the CASE guard keeps under-budget sources at literal 1.0 in both
@@ -1519,8 +1531,8 @@ def graph_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic duplication).
 
     Scale shape: the edge set is ≤ n·k rows (mutual-kNN output), every
-    vertex has ≤ k neighbors, so each label-propagation round is one
-    bounded-fanout join — no hub blowup possible, unlike threshold
+    vertex has ≤ k neighbors, so each union-find round shuffles
+    bounded-fanout edge rows — no hub blowup possible, unlike threshold
     graphs.  The histogram is cluster-size-bounded.  All corpus-scale
     cost lives in the spliced mutual-kNN operator (blocked kernel,
     per-block top-k).

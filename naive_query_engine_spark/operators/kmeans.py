@@ -1444,9 +1444,9 @@ def dataset_split_leakage_safe_ivf(
     audit (on a different substrate, e.g. the exact shingle graph) stays
     in the release checklist.
 
-    Scale shape: components = the label-propagation fixpoint over the
-    session-cached edge frame (one keyed shuffle per round, lineage cut
-    per round); the split is one md5 expression on the component id;
+    Scale shape: components = partition-local union-find rounds over
+    the session-cached edge frame (one keyed shuffle and one lineage cut
+    per round, one round when the graph fits one partition); the split is one md5 expression on the component id;
     the census is split-bounded.  Same content-hash bucketing and ~81/19
     target as every split in the family."""
     from .clustering import connected_components
@@ -3409,7 +3409,7 @@ def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_knn_components_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``graph_knn_components`` on the PRODUCTION substrate: the same
-    label-propagation connected components + cluster-size histogram,
+    union-find connected components + cluster-size histogram,
     but over the per-IVF-cell mutual-kNN edges instead of the exact n²
     graph — the semantic-cluster census a 100 TB corpus actually runs
     (the exact twin stays as the small-SF calibration; the substrate's

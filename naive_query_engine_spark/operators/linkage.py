@@ -79,9 +79,9 @@ def fuzzy_match_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join is keyed by block (bounded fan-out — a degenerate hot block
     would get the salting treatment of ``operators/skew.py``); Levenshtein
     runs JVM-side (whole-stage codegen), only on within-block pairs.  The
-    linkage decision (same entity or not) feeds the same
-    connected-components fixpoint as the dedup family when transitive
-    clusters are needed."""
+    linkage decision (same entity or not) feeds the same union-find as
+    the dedup family's connected components when transitive clusters
+    are needed (:func:`fuzzy_entity_resolution`)."""
     p = t(spark, sf_dir, "part")
     names = p.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).alias("n_recs")
@@ -129,21 +129,20 @@ def fuzzy_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     with variant and record counts.  This is the master-data-management
     flow (dirty catalog → canonical entities).
 
-    r14 (guide §1.2 "the distributed algorithm"): every edge from
-    :func:`blocked_fuzzy_pairs` joins two names in the SAME block (the
-    block key is the join key), so components can never cross blocks —
-    the global fixpoint is the union of independent per-block closures.
-    The old shape ran the generic iterative ``connected_components``
-    (~6 driver rounds × several shuffle jobs each = ~2 s of pure job
-    latency on a 64-vertex/88-edge graph at sf0.1); the new shape
-    cogroups names and edges by block and runs an exact union-find
-    ROW-LOCALLY per block — zero iterations, one cogroup exchange.
-    Per-block work is bounded by the blocking premise itself (a block is
-    small or the blocking key is wrong — the same bound that keeps the
-    Levenshtein join quadratic-per-block affordable), so the shape holds
-    at 100 TB.  Canonical = lexicographic min per component, identical
-    to the fixpoint's answer (union-by-min keeps each tree's root the
-    component minimum)."""
+    Every edge from :func:`blocked_fuzzy_pairs` joins two names in the
+    SAME block (the block key is the join key), so components can never
+    cross blocks: the global closure is the union of independent
+    per-block closures.  Names and edges are cogrouped by block and the
+    package's one union-find (``clustering.union_by_min_kernel``, the
+    kernel of every ``connected_components`` round) runs ROW-LOCALLY per
+    block: one cogroup exchange, no rounds at all.  Per-block work is
+    bounded by the blocking premise itself (a block is small or the
+    blocking key is wrong — the same bound that keeps the Levenshtein
+    join quadratic-per-block affordable), so the shape holds at 100 TB.
+    Canonical = lexicographic min per component: union by min keeps
+    each tree's root the component minimum, the oracle's answer."""
+    from .clustering import union_by_min_kernel
+
     p = t(spark, sf_dir, "part")
     names = p.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).alias("n_recs")
@@ -155,28 +154,18 @@ def fuzzy_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         first_tok(F.col("name_a")).alias("blk"), "name_a", "name_b"
     )
 
+    union_by_min = union_by_min_kernel()
+
     def resolve_block(key, names_pdf, pairs_pdf):
-        # exact union-find, union-by-min: attaching the larger root under
-        # the smaller keeps every tree's root = the component's
-        # lexicographic minimum — the oracle's LEAST/MIN fixpoint answer
         import pandas as pd
 
-        parent = {nm: nm for nm in names_pdf["name"]}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(pairs_pdf["name_a"], pairs_pdf["name_b"]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
+        names = names_pdf["name"].tolist()
+        root = union_by_min(
+            names + pairs_pdf["name_a"].tolist(), names + pairs_pdf["name_b"].tolist()
+        )
         return pd.DataFrame(
             {
-                "canonical_name": [find(nm) for nm in names_pdf["name"]],
+                "canonical_name": [root[nm] for nm in names],
                 "n_recs": names_pdf["n_recs"].values,
             }
         )

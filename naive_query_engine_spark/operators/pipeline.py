@@ -444,8 +444,8 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap exact pass shrinks the expensive stages' input (the same reason
     `pipeline_corpus_curation` runs exact dedup first and BASELINE.md's
     minhash 10× note tells replicated corpora to), and the three stages'
-    machinery — fingerprint groupBy, inverted-index Jaccard + label
-    propagation, blocked-matmul cosine + label propagation — is exactly
+    machinery — fingerprint groupBy, inverted-index Jaccard + connected
+    components, blocked-matmul cosine + connected components — is exactly
     the already-proven operators re-scoped to survivor frames."""
     from ..queries import cut_lineage
     from .clustering import connected_components

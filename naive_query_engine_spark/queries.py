@@ -136,11 +136,8 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     visible to explain.  Inspection-only: executing a lazy-built frame
     recomputes every iteration inside one job, and for frames that
     reference a cut more than once plan ANALYSIS itself grows
-    geometrically per iteration — the BPE trainer's counts (twice) and
-    ``connected_components``' accelerated rounds (the label frame three
-    times per substep, from round 3; a 4-node chain already takes over
-    a minute to construct on 4 cores) — never run results, or the
-    plan-budget tests, under this flag.
+    geometrically per iteration — the BPE trainer's counts (twice) —
+    never run results, or the plan-budget tests, under this flag.
     """
     import os
 
@@ -160,7 +157,8 @@ def cut_lineage(df: DataFrame) -> DataFrame:
 
 def release_cut(df: DataFrame) -> None:
     """Free the blocks behind ``df``, a frame :func:`cut_lineage` returned
-    or a projection of one, once nothing reads it any more (non-blocking).
+    or a projection or filter of one, once nothing reads it any more
+    (non-blocking).
     Any other plan is left alone.  Only the default ``localCheckpoint``
     cut holds blocks: the lazy no-op and the reliable checkpoint (its
     files live in the checkpoint dir) have none here."""
@@ -171,7 +169,7 @@ def release_cut(df: DataFrame) -> None:
     ):
         return
     plan = df._jdf.queryExecution().analyzed()
-    while plan.nodeName() == "Project":
+    while plan.nodeName() in ("Project", "Filter"):
         plan = plan.child()
     if plan.nodeName() == "LogicalRDD":
         plan.rdd().unpersist(False)
@@ -2628,7 +2626,7 @@ def sql_recursive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The recursion is LINEAR by construction (each order has at most one
     successor via LEAD), so the iterative union's frontier is monotone
     shrinking — the safe recursive shape at scale; transitive closures
-    over fan-out graphs belong to the label-propagation operator
+    over fan-out graphs belong to the connected-components operator
     (dedup_connected_components) instead."""
     return _sql_query(spark, sf_dir, _RECURSIVE_CHAIN_SQL)
 

@@ -24,6 +24,17 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def uncoalesced(spark):
+    """AQE partition coalescing off for one test, so a small shuffle keeps
+    all ``spark.sql.shuffle.partitions`` partitions."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield spark
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

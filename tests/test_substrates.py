@@ -141,22 +141,22 @@ def test_clear_releases_cut_backed_values(spark, cache, shape):
 
 
 def _cut_rdd_id(df) -> int:
-    """Id of the checkpointed RDD that the (projected) cut frame reads."""
+    """Id of the checkpointed RDD that the (filtered, projected) cut frame reads."""
     return df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().id()
 
 
 @pytest.mark.parametrize("max_iter", [25, 1])
-def test_connected_components_releases_its_edge_frame(spark, max_iter):
-    """The symmetrized edge frame is persisted for the fixpoint and
-    released after it, whether it converges or raises.  A chain needs
-    the accelerated rounds, so several rounds cut their labels: a
-    converged call keeps only the cut behind its result, a failed one
-    keeps none."""
+def test_connected_components_releases_its_edge_frame(spark, uncoalesced, max_iter):
+    """Each round's lineage cut is released once the next has
+    materialized, and the last one backs the result.  With coalescing
+    off the chain spreads over many partitions and takes several
+    rounds, so a converged call keeps only the cut behind its result,
+    and a call that runs out of rounds keeps none."""
     from naive_query_engine_spark.operators.clustering import connected_components
 
     vertices, edges = _chain(spark)
     before = _persistent_rdds(spark)
-    if max_iter == 1:  # the first round changes labels, so one is too few
+    if max_iter == 1:  # the chain spans partitions, so one round is too few
         with pytest.raises(RuntimeError, match="not converged"):
             connected_components(vertices, edges, max_iter=max_iter)
         assert _persistent_rdds(spark) <= before

@@ -6,11 +6,6 @@ SPARK_GRAFT_LAZY_CUTS=1 so plan construction for cut-lineage operators
 does not execute Spark jobs; the pre-cut lineage (iteration exchanges
 included) is visible, matching how PLANS.md documents those operators.
 
-Warning: under that flag, plan analysis of ``connected_components`` grows
-exponentially from its third round, so a query built on components
-(the cascade, knn-components, leakage-safe splits) can stall here.
-Dump those with ``SPARK_GRAFT_LAZY_CUTS=`` (empty: real, eager cuts).
-
 Usage: python tools/dump_plan_pair.py <tag> [names...]
 """
 

@@ -92,8 +92,8 @@ ANNOTATED = {
     "boilerplate fan-out, inverted-index self-join only meets same-window "
     "docs — the bounded-candidate shape, never all-pairs",
     "fuzzy_entity_resolution": "blocked Levenshtein pairs (block-key "
-    "equi-join bounds the quadratic kernel) feed the label-propagation "
-    "fixpoint on string ids; final per-entity aggregation",
+    "equi-join bounds the quadratic kernel) feed a per-block union-find "
+    "on string ids; final per-entity aggregation",
     "text_char_bigram_likelihood": "bigram expansion is a narrow per-row "
     "transform; count table bounded by charset^2 (AQE broadcasts it); one "
     "join keyed by bigram + one doc aggregation",
@@ -252,7 +252,7 @@ ANNOTATED = {
     "pipeline_dedup_weighted_mixture": "components behind the edge-frame "
     "lineage cuts; one source-keyed agg + 1-row totals broadcast",
     "graph_knn_components": "mutual-kNN edges (<= n*k rows, degree <= k) "
-    "feed bounded-fanout label propagation; size + histogram aggs only",
+    "feed bounded-fanout union-find components; size + histogram aggs only",
     # --- r6 second wave ---
     "dedup_segment_exact": "tiling segments (corpus/W rows, not corpus x W "
     "like overlapping shingles); md5-keyed df shuffle + same-key join-back "
@@ -381,7 +381,7 @@ ANNOTATED = {
     "dataset_contamination_check_ivf": "one cosine filter + eval-parity "
     "orientation over the shared ivf_cell_cosine_pairs frame — semantic "
     "decontamination at index-build cost, not n^2",
-    "dataset_split_leakage_safe_ivf": "label-propagation components over "
+    "dataset_split_leakage_safe_ivf": "union-find components over "
     "the cached IVF edges (one keyed shuffle per round, lineage cut), "
     "md5 split on the component id, split-bounded census — leakage zero "
     "by construction on the substrate the index can see",
@@ -395,7 +395,7 @@ ANNOTATED = {
     "broadcast checksum join; driver collects are the K-flag set and "
     "KxD centroid dicts",
     "dedup_semantic_ivf": "SemDeDup on the substrate: tau-filter over "
-    "the shared within-cell pairs frame, label-propagation components, "
+    "the shared within-cell pairs frame, union-find components, "
     "canonical census — cross-cell misses only SPLIT groups "
     "(conservative dedup), never merge",
     "dedup_ingest_admit_gate": "the admit arm of the index lifecycle: "

@@ -112,9 +112,9 @@ def main() -> None:
                 ).write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
             res["modularity_ivf_sec"] = round(best, 2)
-            # the components overlay (VERDICT r7 #7): label propagation
-            # over the cached edges; perturbed copies keep the diameter
-            # honest, so this measures per-round propagation cost
+            # the components overlay (VERDICT r7 #7): connected
+            # components over the cached edges; perturbed copies keep the
+            # graph honest, so this measures the union-find rounds' cost
             verts = t(spark, work, "embeddings").select(
                 F.col("vec_id").alias("id")
             )
