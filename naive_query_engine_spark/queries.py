@@ -158,10 +158,9 @@ def cut_lineage(df: DataFrame) -> DataFrame:
 def release_cut(df: DataFrame) -> None:
     """Free the blocks behind ``df``, a frame :func:`cut_lineage` returned
     or a projection or filter of one, once nothing reads it any more
-    (non-blocking).
-    Any other plan is left alone.  Only the default ``localCheckpoint``
-    cut holds blocks: the lazy no-op and the reliable checkpoint (its
-    files live in the checkpoint dir) have none here."""
+    (non-blocking).  Any other plan is left alone.  Only the default
+    ``localCheckpoint`` cut holds blocks: the lazy no-op and the reliable
+    checkpoint (its files live in the checkpoint dir) have none here."""
     import os
 
     if os.environ.get("SPARK_GRAFT_LAZY_CUTS") or os.environ.get(

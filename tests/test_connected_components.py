@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
-
 from naive_query_engine_spark.operators import clustering
 from naive_query_engine_spark.operators.clustering import connected_components
 
@@ -85,12 +83,12 @@ def test_one_partition_graph_takes_one_round(spark, monkeypatch):
     union-find: one lineage cut, and at most 5 Spark jobs for the call
     and the read of its result."""
     cuts = []
+    cut_lineage = clustering.cut_lineage
 
     def counting_cut(df):
         cuts.append(df)
         return cut_lineage(df)
 
-    cut_lineage = clustering.cut_lineage
     monkeypatch.setattr(clustering, "cut_lineage", counting_cut)
     sc = spark.sparkContext
     vertices = spark.range(6)
@@ -104,4 +102,3 @@ def test_one_partition_graph_takes_one_round(spark, monkeypatch):
     assert sorted(map(tuple, rows)) == [(i, 0) for i in range(6)]
     assert len(cuts) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
-
