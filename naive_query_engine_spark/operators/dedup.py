@@ -1934,9 +1934,9 @@ def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 (guide §2.3/§2.4, replacing the r13 collect_set shape): the
     per-shingle source set is a BITMASK — sources are a bounded label
     set (the output matrix is |sources|²-bounded by this operator's own
-    contract, and the mask caps at 64 labels), so ``bit_or`` of
-    ``1 << source_idx`` collects the set as one LONG in a codegen
-    HashAggregate with map-side partials, where ``collect_set`` ran as
+    contract, and the mask caps at 64 labels: a 65th fails the query),
+    so ``bit_or`` of ``1 << source_idx`` collects the set as one LONG in
+    a codegen HashAggregate with map-side partials, where ``collect_set`` ran as
     an ObjectHashAggregate (no whole-stage codegen, per-row set
     allocation) whose n_shingles-row output then fed TWO explode
     consumers.  The mask frame collapses to ≤2^|sources| rows in a
@@ -1959,15 +1959,20 @@ def dedup_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-DOC mask bit: the 1-row vocabulary crossJoin (a BNLJ) touches
     # only the n_docs-row side — the shingle-scale rows below join it by
-    # doc_id hash, never through a nested-loop
+    # doc_id hash, never through a nested-loop.  A LONG holds 64 bits and
+    # shiftleft takes its shift mod 64 (source 65 would alias source 1),
+    # so a larger vocabulary fails the row expression instead
     d_bit = (
         d.select("doc_id", "source")
         .crossJoin(F.broadcast(lst))
         .select(
             "doc_id",
             F.expr(
-                "shiftleft(CAST(1 AS BIGINT),"
-                " CAST(array_position(all_ss, source) - 1 AS INT))"
+                "CASE WHEN size(all_ss) > 64 THEN raise_error(concat("
+                "'dedup_cross_source_overlap: ', size(all_ss),"
+                " ' sources exceed the 64-bit source mask'))"
+                " ELSE shiftleft(CAST(1 AS BIGINT),"
+                " CAST(array_position(all_ss, source) - 1 AS INT)) END"
             ).alias("b"),
         )
     )

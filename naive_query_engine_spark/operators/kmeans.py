@@ -832,11 +832,12 @@ def similarity_mutual_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT graph as its reference, so its cost is the exact graph's
     (intrinsic n²; run it on a sample, like
     `dedup_minhash_recall_vs_exact`).  The per-cell EDGE BUILD inside
-    it is the production path: one cell-keyed self-join fanning
-    Σ cell_size².  The probe (K fixed at {KMEANS_K}, n growing) reads
-    that as n²/K; production holds CELL SIZE constant and grows K with
-    n, which makes the build linear in n — the knob the report's
-    recall/precision prices.
+    it is the production path: one cell-keyed groupBy and one
+    cosine-and-rank pass per cell over Σ cell_size² pairs
+    (:func:`cell_mutual_knn_edges`).  The probe (K fixed at
+    {KMEANS_K}, n growing) reads that as n²/K; production holds CELL
+    SIZE constant and grows K with n, which makes the build linear in
+    n — the knob the report's recall/precision prices.
 
     Determinism: integer dots, (cosine DESC, dst) total order — the
     exact graph's tie discipline, inherited verbatim."""
@@ -872,14 +873,16 @@ def ivf_cell_cosine_pairs(
 ) -> DataFrame:
     """Every within-cell pair (vec_a < vec_b, cosine) under the learned
     Lloyd-cell assignment — the shared candidate frame beneath the
-    mutual-kNN substrate and the τ-range search.  Candidate pairs are
-    Σ cell_size², never n²; production holds cell size constant and
-    grows the cell count with n (``k_cells``), making the build linear
-    (K∝n probe rows in BASELINE.md r7).  Session-cached: the Lloyd
-    training (the expensive, eager prefix) runs once per
-    (session, corpus, K).  A LAZY plan whose centroids are baked
-    driver-side literals; with the edge frame it is the maintained
-    vector index five registered queries ride."""
+    τ-range search, the IVF hard negatives and semantic dedup (the
+    mutual-kNN substrate ranks inside its own per-cell kernel instead,
+    `ivf_mutual_knn_edges`).  Candidate pairs are Σ cell_size², never
+    n²; production holds cell size constant and grows the cell count
+    with n (``k_cells``), making the build linear (K∝n probe rows in
+    BASELINE.md r7).  Session-cached: the Lloyd training (the
+    expensive, eager prefix) runs once per (session, corpus, K).  A
+    LAZY plan whose centroids are baked driver-side literals; with the
+    edge frame it is the maintained vector index five registered
+    queries ride."""
     assign, _ = ivf_corpus_assignment(spark, sf_dir, k_cells)
     return cell_cosine_pairs_from_assignment(assign)
 
@@ -954,29 +957,27 @@ def corpus_centroids(
     return ivf_corpus_assignment(spark, sf_dir, k_cells)[1]
 
 
-def cell_cosine_pairs_from_assignment(
-    assign: DataFrame, with_cell: bool = False
+def _cell_block_pairs(
+    assign: DataFrame, select, with_cosine: bool, with_cell: bool
 ) -> DataFrame:
-    """Within-cell (vec_a < vec_b, cosine) pairs for ANY assignment frame
-    (vec_id, q, nrm2, cell) — the substrate builder factored out so the
-    incremental index maintenance can run it on a partition-pruned
-    touched-cells slice instead of the whole corpus.  ``with_cell``
-    retains the cell id (every pair is within-cell, so it has exactly
-    one), which the maintained cell-partitioned index needs.
+    """The per-cell block kernel under :func:`cell_cosine_pairs_from_assignment`
+    and :func:`cell_mutual_knn_edges`: one ``groupBy(cell)`` row per cell
+    (members in ascending vec_id), one float64 cosine matmul per cell in a
+    pandas kernel, and ``select(cos)`` → the (i < j) index pairs of the
+    cell to emit as (vec_a, vec_b[, cosine][, cell]).  ``select`` must be
+    a local function so the kernel pickles by value.
 
     r13 (guide §4.2): the pair dots run as ONE numpy matmul per cell
-    inside a pandas kernel instead of a cell-keyed self-join evaluating
-    a `zip_with` dot per pair in the JVM — the `cosine_block_pairs`
-    idiom applied to the cell blocking.  Arithmetic is bit-identical:
-    quantized components are exact in float64 (|dot| ≤ 64·10¹² ≪ 2⁵³,
-    every partial sum an exactly-representable integer, so BLAS
-    summation order is irrelevant) and the final cosine is the same
-    sqrt/multiply/divide sequence as `cosine_q`.  One groupBy(cell)
-    exchange replaces the self-join, and per-pair work leaves the JVM
-    expression interpreter for vectorized native code.  Per-task memory
-    is one cell's members + its n_c×n_c cosine matrix — bounded by the
-    cell-size discipline (production holds cell size ~constant and
-    grows K with n; the df-cap levers in BASELINE.md probe it)."""
+    instead of a cell-keyed self-join evaluating a `zip_with` dot per
+    pair in the JVM — the `cosine_block_pairs` idiom applied to the cell
+    blocking.  Arithmetic is bit-identical: quantized components are
+    exact in float64 (|dot| ≤ 64·10¹² ≪ 2⁵³, every partial sum an
+    exactly-representable integer, so BLAS summation order is irrelevant
+    and the matrix is exactly symmetric) and the final cosine is the same
+    sqrt/multiply/divide sequence as `cosine_q`.  Per-task memory is one
+    cell's members + its n_c×n_c cosine matrix — bounded by the cell-size
+    discipline (production holds cell size ~constant and grows K with n;
+    the df-cap levers in BASELINE.md probe it)."""
     import numpy as np
     import pandas as pd
 
@@ -994,76 +995,93 @@ def cell_cosine_pairs_from_assignment(
     # (the block_pair_frame precedent: repartition BEFORE the expansion)
     n_parts = max(assign.sparkSession.sparkContext.defaultParallelism, 8)
     grouped = grouped.repartition(n_parts)
-    emit_cell = bool(with_cell)
-    schema = "vec_a long, vec_b long, cosine double" + (
-        ", cell long" if emit_cell else ""
+    cols = {"vec_a": "int64", "vec_b": "int64"}
+    if with_cosine:
+        cols["cosine"] = "float64"
+    if with_cell:
+        cols["cell"] = "int64"
+    schema = ", ".join(
+        f"{c} {'double' if t == 'float64' else 'long'}" for c, t in cols.items()
     )
 
-    def cell_matmul(batches):
+    def cell_block(batches):
         got_any = False
         for pdf in batches:
             for row in pdf.itertuples(index=False):
                 ids = np.asarray(row.ids, dtype=np.int64)
-                n = len(ids)
-                if n < 2:
+                if len(ids) < 2:
                     continue
                 mat = np.asarray(list(row.vecs), dtype=np.float64)
                 nrm = np.sqrt(np.asarray(row.n2s, dtype=np.float64))
                 cos = (mat @ mat.T) / (nrm[:, None] * nrm[None, :])
-                # ids are array_sort'ed ascending (distinct vec_ids), so the
-                # upper triangle enumerates exactly the vec_a < vec_b pairs
-                iu, ju = np.triu_indices(n, k=1)
+                # ids are array_sort'ed ascending (distinct vec_ids), so an
+                # i < j index pair is a vec_a < vec_b pair
+                iu, ju = select(cos)
                 got_any = True
-                out = {"vec_a": ids[iu], "vec_b": ids[ju], "cosine": cos[iu, ju]}
-                if emit_cell:
+                out = {"vec_a": ids[iu], "vec_b": ids[ju]}
+                if with_cosine:
+                    out["cosine"] = cos[iu, ju]
+                if with_cell:
                     out["cell"] = np.full(len(iu), row.cell, dtype=np.int64)
                 yield pd.DataFrame(out)
         if not got_any:
-            out = {
-                "vec_a": pd.Series([], dtype="int64"),
-                "vec_b": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-            if emit_cell:
-                out["cell"] = pd.Series([], dtype="int64")
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({c: pd.Series([], dtype=t) for c, t in cols.items()})
 
-    return grouped.mapInPandas(cell_matmul, schema)
+    return grouped.mapInPandas(cell_block, schema)
 
 
-def mutual_knn_edges_from_pairs(
-    pairs: DataFrame, top_k: int, with_cell: bool = False
+def cell_cosine_pairs_from_assignment(
+    assign: DataFrame, with_cell: bool = False
 ) -> DataFrame:
-    """(vec_a < vec_b) mutual top-k edges from a within-cell pairs frame —
-    the ranking half of the substrate, factored for the same reason as
-    :func:`cell_cosine_pairs_from_assignment`.  With ``with_cell`` the
-    input pairs must carry ``cell`` and the output keeps it."""
-    from pyspark.sql import Window
+    """Within-cell (vec_a < vec_b, cosine) pairs for ANY assignment frame
+    (vec_id, q, nrm2, cell) — the candidate frame of the τ-range search,
+    the IVF hard negatives and semantic dedup (via
+    `ivf_cell_cosine_pairs`).  ``with_cell`` retains the cell id (every
+    pair is within-cell, so it has exactly one).  One groupBy(cell)
+    exchange and one matmul per cell (:func:`_cell_block_pairs`);
+    Σ cell_size² rows out."""
+    import numpy as np
 
-    extra = ["cell"] if with_cell else []
-    directed = pairs.select(
-        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"), "cosine", *extra
-    ).unionAll(
-        pairs.select(
-            F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"), "cosine", *extra
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), "dst")
-    ranked = directed.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= top_k
-    )
-    x, y = ranked.alias("x"), ranked.alias("y")
-    out = [F.col("x.src").alias("vec_a"), F.col("x.dst").alias("vec_b")] + (
-        [F.col("x.cell").alias("cell")] if with_cell else []
-    )
-    return (
-        x.join(
-            y,
-            (F.col("y.src") == F.col("x.dst")) & (F.col("y.dst") == F.col("x.src")),
-        )
-        .filter(F.col("x.src") < F.col("x.dst"))
-        .select(*out)
-    )
+    def upper_triangle(cos):
+        return np.triu_indices(len(cos), k=1)
+
+    return _cell_block_pairs(assign, upper_triangle, True, with_cell)
+
+
+def cell_mutual_knn_edges(
+    assign: DataFrame, top_k: int, with_cell: bool = False
+) -> DataFrame:
+    """Within-cell mutual top-k edges (vec_a < vec_b[, cell]) for ANY
+    assignment frame (vec_id, q, nrm2, cell) — the edge set of the IVF
+    substrate and of the maintained index (build, upsert, repair), so the
+    incremental maintenance runs it on a partition-pruned touched-cells
+    slice instead of the whole corpus.
+
+    Ranked inside the per-cell kernel (:func:`_cell_block_pairs`): each
+    member's other members are ordered by (cosine DESC, vec_id ASC) — a
+    stable argsort of -cosine over members already in ascending vec_id —
+    the first min(top_k, n-1) are its top-k, and a pair is an edge when
+    each end is in the other's top-k (the upper triangle of
+    ``top & top.T``).  That is the oracle's ``ROW_NUMBER() OVER
+    (PARTITION BY src ORDER BY cosine DESC, dst)`` + reverse-rank join,
+    restricted to the cell: every pair of a vector is within its cell.
+    One groupBy(cell) exchange and one pandas pass; no window, union or
+    self-join.  Per-task memory is the cell's n_c×n_c cosine matrix plus
+    an n_c×n_c argsort."""
+    import numpy as np
+
+    k = int(top_k)
+
+    def mutual_top_k(cos):
+        n = len(cos)
+        key = -cos
+        np.fill_diagonal(key, np.inf)  # a member is not its own neighbour
+        order = np.argsort(key, axis=1, kind="stable")[:, : min(k, n - 1)]
+        top = np.zeros((n, n), dtype=bool)
+        top[np.arange(n)[:, None], order] = True
+        return np.nonzero(np.triu(top & top.T, k=1))
+
+    return _cell_block_pairs(assign, mutual_top_k, False, with_cell)
 
 
 @substrate
@@ -1073,18 +1091,19 @@ def ivf_mutual_knn_edges(
     """The per-IVF-cell mutual-kNN EDGE FRAME (vec_a < vec_b) — the
     production substrate every kNN-graph overlay should run on at scale
     (VERDICT r6 #3): assign vectors to learned Lloyd cells, cosine-rank
-    within the cell, keep mutual top-k.  Candidate generation is
-    `ivf_cell_cosine_pairs` (registered queries keep the KMEANS_K
+    within the cell, keep mutual top-k — all three inside one per-cell
+    kernel over the session-cached assignment
+    (:func:`cell_mutual_knn_edges`; registered queries keep the KMEANS_K
     default so the oracle stays aligned; tools/ivf_kprop_probe.py
     passes k_cells ∝ n to measure the linear path, BASELINE.md r7).
     The quality price of the restriction is exactly what
     ``similarity_mutual_knn_ivf``'s recall/precision report measures.
-    Session-cached like the pairs frame (one materialized edge frame
-    per (session, corpus, K))."""
+    Session-cached: one materialized edge frame per (session, corpus,
+    K)."""
     from .similarity import TOP_K
 
-    pairs = ivf_cell_cosine_pairs(spark, sf_dir, k_cells)
-    ivf_edges = mutual_knn_edges_from_pairs(pairs, TOP_K)
+    assign, _ = ivf_corpus_assignment(spark, sf_dir, k_cells)
+    ivf_edges = cell_mutual_knn_edges(assign, TOP_K)
     # materialized once (localCheckpoint): the frame is reused multiply
     # inside each overlay AND across the five substrate consumers
     return cut_lineage(ivf_edges)
@@ -2897,10 +2916,13 @@ def ivf_probe_neighbors(
 # recomputes a touched cell's edges from that cell's FULL current
 # membership, so after any sequence of batches the state equals the
 # from-scratch build over the final corpus under the same centroids —
-# arrival order and batch boundaries cannot matter.  Staleness never
-# hides: a touched cell with ≥2 members always has ≥1 mutual edge (the
-# max-cosine pair (a,b) with a = min vertex among max-cosine pairs is
-# mutual rank-1 under the (cosine DESC, dst ASC) tie-break), so dynamic
+# arrival order and batch boundaries cannot matter.  A touched cell's
+# edges come from one pass of `cell_mutual_knn_edges` over its members:
+# one cosine matrix, each row ranked (cosine DESC, vec_id ASC), the
+# mutual top-k pairs emitted — no window or self-join over the pairs.
+# Staleness never hides: a touched cell with ≥2 members always has ≥1
+# mutual edge (the max-cosine pair (a,b) with a = min vertex among
+# max-cosine pairs is mutual rank-1 under that tie-break), so dynamic
 # partition overwrite always carries rows for every touched cell that
 # could hold stale edges; cells with ≤1 prior member had none.
 
@@ -2929,11 +2951,7 @@ def build_ivf_vector_index(
     )
     centroids = train_centroids(qt, k_cells, KMEANS_ITERS)
     assign = _assign_to_cells(qt, centroids)
-    edges = mutual_knn_edges_from_pairs(
-        cell_cosine_pairs_from_assignment(assign, with_cell=True),
-        k,
-        with_cell=True,
-    )
+    edges = cell_mutual_knn_edges(assign, k, with_cell=True)
     spark.createDataFrame(
         [(j, centroids[j]) for j in sorted(centroids)],
         "c_label long, centroid array<long>",
@@ -3009,10 +3027,12 @@ def upsert_ivf_vector_index(
         "vec_id", quantized(F.col("embedding")).alias("q")
     ).withColumn("nrm2", dot_q(F.col("q"), F.col("q")))
     new_assign = cut_lineage(_assign_to_cells(qt, centroids))
-    touched = sorted(
-        r["cell"] for r in new_assign.select("cell").distinct().collect()
-    )  # bounded by k_cells
-    n_arrivals = new_assign.count()
+    per_cell = {
+        r["cell"]: r["count"]
+        for r in new_assign.groupBy("cell").count().collect()
+    }  # bounded by k_cells
+    touched = sorted(per_cell)
+    n_arrivals = sum(per_cell.values())
     if not touched:
         return {
             "n_arrivals": 0,
@@ -3027,11 +3047,7 @@ def upsert_ivf_vector_index(
         .unionByName(new_assign.select("vec_id", "q", "nrm2", "cell"))
     )
     new_edges = cut_lineage(
-        mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(members, with_cell=True),
-            int(conf["top_k"]),
-            with_cell=True,
-        )
+        cell_mutual_knn_edges(members, int(conf["top_k"]), with_cell=True)
     )
     prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -3216,11 +3232,7 @@ def repair_ivf_vector_index(
     refreshed = {cells[j]: v for j, v in trained.items()}
     new_assign = cut_lineage(_assign_to_cells(members, refreshed))
     new_edges = cut_lineage(
-        mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(new_assign, with_cell=True),
-            int(conf["top_k"]),
-            with_cell=True,
-        )
+        cell_mutual_knn_edges(new_assign, int(conf["top_k"]), with_cell=True)
     )
     # hybrid centroid table: frozen rows for untouched cells + refreshed
     old = {
@@ -3340,8 +3352,9 @@ def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per batch the work is one broadcast-centroid assign of
     the batch, a membership scan partition-pruned to the touched cells,
-    and Σ(touched cell size)² candidate pairs — never corpus-sized; the
-    bounded collects are the K-cell touched set (the Lloyd K×D collect
+    and one `cell_mutual_knn_edges` pass: a cosine matrix per touched
+    cell, Σ(touched cell size)² entries ranked and mutual-filtered inside
+    that cell's task — never corpus-sized; the bounded collects are the K-cell touched set (the Lloyd K×D collect
     discipline).  The persisted-table twin (cell-partitioned, vec_a-
     bucketed, dynamic partition overwrite) is pinned in
     tests/test_ivf_edge_index.py, including stream==batch equivalence.
@@ -3359,11 +3372,7 @@ def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = train_centroids(base.select("vec_id", "q"), KMEANS_K, KMEANS_ITERS)
     state_assign = cut_lineage(_assign_to_cells(base, centroids))
     state_edges = cut_lineage(
-        mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(state_assign, with_cell=True),
-            TOP_K,
-            with_cell=True,
-        )
+        cell_mutual_knn_edges(state_assign, TOP_K, with_cell=True)
     )
     for pred in _UPSERT_BATCH_PREDS:
         batch = qt.filter(F.expr(pred))
@@ -3374,11 +3383,7 @@ def similarity_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         members = state_assign.filter(F.col("cell").isin(touched)).unionByName(
             new_assign
         )
-        new_edges = mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(members, with_cell=True),
-            TOP_K,
-            with_cell=True,
-        )
+        new_edges = cell_mutual_knn_edges(members, TOP_K, with_cell=True)
         state_edges = cut_lineage(
             state_edges.filter(~F.col("cell").isin(touched)).unionByName(new_edges)
         )

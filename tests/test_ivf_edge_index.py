@@ -90,6 +90,8 @@ def test_table_matches_session_built_edges(spark, ivf_index):
 
 
 MAINT_TABLE = "b_ivf_maint_index"
+#: measured Spark jobs of one upsert_ivf_vector_index call on maint_index
+UPSERT_JOBS = 15
 
 
 def _vectors(spark, pred: str):
@@ -134,8 +136,7 @@ def _rebuild_reference(spark):
         KMEANS_ITERS,
         KMEANS_K,
         _assign_to_cells,
-        cell_cosine_pairs_from_assignment,
-        mutual_knn_edges_from_pairs,
+        cell_mutual_knn_edges,
         train_centroids,
     )
     from naive_query_engine_spark.operators.similarity import (
@@ -149,11 +150,7 @@ def _rebuild_reference(spark):
         qt.filter("vec_id % 3 <> 0").select("vec_id", "q"), KMEANS_K, KMEANS_ITERS
     )
     assign = _assign_to_cells(qt, centroids)
-    edges = mutual_knn_edges_from_pairs(
-        cell_cosine_pairs_from_assignment(assign, with_cell=True),
-        TOP_K,
-        with_cell=True,
-    )
+    edges = cell_mutual_knn_edges(assign, TOP_K, with_cell=True)
     return assign, edges
 
 
@@ -186,6 +183,44 @@ def test_upsert_converges_to_batch_rebuild(spark, maint_index):
     assert got_assign == sorted(
         (r["vec_id"], r["cell"]) for r in want_assign.collect()
     )
+
+
+def test_upsert_job_ceiling_and_one_kernel_pass(spark, maint_index):
+    """One upsert runs at most UPSERT_JOBS Spark jobs (counted by job
+    group), and its edge recompute executes the per-cell kernel once,
+    with no Window: ranking and the mutual filter happen inside that
+    pass.  Ranking the pairs frame with a window and a reverse-rank
+    self-join ran the pair kernel four times, in 20 jobs per upsert."""
+    from naive_query_engine_spark.operators.kmeans import (
+        cell_mutual_knn_edges,
+        upsert_ivf_vector_index,
+    )
+    from naive_query_engine_spark.operators.similarity import TOP_K
+
+    arrivals = _vectors(spark, "vec_id % 6 = 0")
+    sc = spark.sparkContext
+    group = "ivf-upsert-jobs"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        res = upsert_ivf_vector_index(spark, MAINT_TABLE, arrivals)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["n_arrivals"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= UPSERT_JOBS
+    spark.catalog.refreshTable(f"{MAINT_TABLE}_assign")
+    edges = cell_mutual_knn_edges(
+        spark.table(f"{MAINT_TABLE}_assign").filter(
+            F.col("cell").isin(res["touched_cells"])
+        ),
+        TOP_K,
+        with_cell=True,
+    )
+    assert len(edges.collect()) == res["n_edges_written"]
+    final_plan = (
+        edges._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    )
+    assert final_plan.count("MapInPandas") == 1, final_plan
+    assert "Window" not in final_plan, final_plan
 
 
 def test_upsert_members_scan_is_partition_pruned(spark, maint_index):
@@ -259,8 +294,7 @@ def test_repair_flagged_cells_partial_retrain(spark, maint_index):
     from naive_query_engine_spark.operators.kmeans import (
         KMEANS_ITERS,
         _assign_to_cells,
-        cell_cosine_pairs_from_assignment,
-        mutual_knn_edges_from_pairs,
+        cell_mutual_knn_edges,
         repair_ivf_vector_index,
         train_centroids,
     )
@@ -341,12 +375,8 @@ def test_repair_flagged_cells_partial_retrain(spark, maint_index):
     assert sorted(v for v, _ in got_assign) == sorted(v for v, _, _ in pool_rows)
     want_edges = sorted(
         tuple(r)
-        for r in mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(
-                _assign_to_cells(pool_df, refreshed), with_cell=True
-            ),
-            TOP_K,
-            with_cell=True,
+        for r in cell_mutual_knn_edges(
+            _assign_to_cells(pool_df, refreshed), TOP_K, with_cell=True
         ).collect()
     )
     got_edges = sorted(

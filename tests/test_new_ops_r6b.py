@@ -7,6 +7,7 @@ import struct
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from naive_query_engine_spark.queries import QUERIES
 
@@ -895,13 +896,13 @@ def test_phash_hamming_census_matches_numpy(spark):
 # dedup_cross_source_overlap: source-pair Jaccard recomputed in Python
 
 
-def test_cross_source_overlap_matches_recompute(spark):
+def _check_cross_source_overlap(spark, sf_dir: str) -> None:
     import re
 
     from naive_query_engine_spark.operators.dedup import OVERLAP_FP
     from naive_query_engine_spark.operators.shingles_sql import MAX_SHINGLE_DF
 
-    docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")[
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")[
         ["doc_id", "source", "text"]
     ]
     doc_sh: list[tuple[str, set[str]]] = []
@@ -918,7 +919,7 @@ def test_cross_source_overlap_matches_recompute(spark):
         src_sh.setdefault(source, set()).update(keep)
     got = {
         (r["source_a"], r["source_b"]): r
-        for r in QUERIES["dedup_cross_source_overlap"].fn(spark, SF_SMOKE).collect()
+        for r in QUERIES["dedup_cross_source_overlap"].fn(spark, sf_dir).collect()
     }
     srcs = sorted(src_sh)
     want_pairs = 0
@@ -934,6 +935,31 @@ def test_cross_source_overlap_matches_recompute(spark):
             assert (g["shared_shingles"], g["union_shingles"]) == (shared, union)
             assert g["jaccard_fp"] == (shared * OVERLAP_FP) // union
     assert want_pairs == len(got)
+
+
+def test_cross_source_overlap_matches_recompute(spark):
+    _check_cross_source_overlap(spark, SF_SMOKE)
+
+
+def _relabel_sources(tmp_path, n_sources: int) -> str:
+    """The smoke corpus's documents with ``n_sources`` source labels."""
+    docs = pd.read_parquet(f"{SF_SMOKE}/documents.parquet")
+    docs["source"] = [f"src{i % n_sources:03d}" for i in docs["doc_id"]]
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    return str(tmp_path)
+
+
+def test_cross_source_overlap_uses_all_64_mask_bits(spark, tmp_path):
+    """64 sources fill the LONG mask, bit 63 included, and stay exact."""
+    _check_cross_source_overlap(spark, _relabel_sources(tmp_path, 64))
+
+
+def test_cross_source_overlap_rejects_65_sources(spark, tmp_path):
+    """A 65th source has no mask bit (shiftleft wraps it onto source 1),
+    so the query fails instead of merging the two sources' vocabularies."""
+    sf_dir = _relabel_sources(tmp_path, 65)
+    with pytest.raises(Exception, match="65 sources exceed the 64-bit source mask"):
+        QUERIES["dedup_cross_source_overlap"].fn(spark, sf_dir).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -122,8 +122,7 @@ def test_upsert_fold_single_vs_two_batches_agree(spark):
         _EDGE_CKSUM,
         _UPSERT_TRAIN_PRED,
         _assign_to_cells,
-        cell_cosine_pairs_from_assignment,
-        mutual_knn_edges_from_pairs,
+        cell_mutual_knn_edges,
         train_centroids,
     )
     from naive_query_engine_spark.operators.similarity import TOP_K, _qtable
@@ -134,11 +133,7 @@ def test_upsert_fold_single_vs_two_batches_agree(spark):
     centroids = train_centroids(base.select("vec_id", "q"), KMEANS_K, KMEANS_ITERS)
     # one-shot fold: everything arrives at once
     assign = _assign_to_cells(qt, centroids)
-    edges = mutual_knn_edges_from_pairs(
-        cell_cosine_pairs_from_assignment(assign, with_cell=True),
-        TOP_K,
-        with_cell=True,
-    )
+    edges = cell_mutual_knn_edges(assign, TOP_K, with_cell=True)
     want = {
         (r["cell"], r["n_members"], r["n_edges"], r["cksum"])
         for r in assign.groupBy("cell")

@@ -772,8 +772,7 @@ def test_stream_ivf_index_upsert_equals_batch_rebuild(spark, tmp_path):
         KMEANS_K,
         _assign_to_cells,
         build_ivf_vector_index,
-        cell_cosine_pairs_from_assignment,
-        mutual_knn_edges_from_pairs,
+        cell_mutual_knn_edges,
         train_centroids,
         upsert_ivf_vector_index,
     )
@@ -810,12 +809,8 @@ def test_stream_ivf_index_upsert_equals_batch_rebuild(spark, tmp_path):
             KMEANS_K,
             KMEANS_ITERS,
         )
-        want_edges = mutual_knn_edges_from_pairs(
-            cell_cosine_pairs_from_assignment(
-                _assign_to_cells(qt, centroids), with_cell=True
-            ),
-            TOP_K,
-            with_cell=True,
+        want_edges = cell_mutual_knn_edges(
+            _assign_to_cells(qt, centroids), TOP_K, with_cell=True
         )
         # the upserts ran under the stream's cloned session: refresh this
         # session's relation cache before reading the final state
