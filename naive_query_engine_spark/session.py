@@ -53,6 +53,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.driver.extraJavaOptions": (
         "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     ),
+    # Whole-stage-codegen class cache (static conf, so it is set here).
+    # Spark's default of 100 is a Guava cache of 4 LRU segments (~25
+    # classes each); a session that cycles through a few operators
+    # (index upserts between warm reads: ~80 distinct classes per cycle)
+    # evicts each operator's classes before its next call, so every call
+    # recompiled 10-40 classes through Janino and re-ran them cold in
+    # the JIT.  500 holds the ≤ ~230 classes of either perfbench
+    # workload with headroom.
+    "spark.sql.codegen.cache.maxEntries": "500",
     # bucketed-table warehouse (co-located joins); keep out of the repo tree
     "spark.sql.warehouse.dir": "/tmp/nqes-warehouse",
 }
