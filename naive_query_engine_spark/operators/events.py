@@ -4,7 +4,7 @@ The reference has zero streaming/window capability (SURVEY §2.8).  Spark's
 ``window()`` and ``session_window()`` work identically over batch and
 streaming DataFrames, so these registered batch queries are the
 oracle-checkable faces of the operators that ``streaming/`` wires to
-``readStream``/watermarks.
+streams and watermarks.
 """
 
 from __future__ import annotations
@@ -15,19 +15,6 @@ from pyspark.sql import functions as F
 from ..queries import cut_lineage, dec, query, t
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def _clamped_shuffle(spark: SparkSession, n: int = 32):
-    """Shared streaming-harness shuffle clamp (lives in ..streaming).
-
-    Resolved at CALL time, not import time: when ``streaming`` is the
-    entry module it imports ``queries`` → operator registration → this
-    module, and a top-level import back into the partially initialized
-    ``streaming`` package would deadlock (caught by test_streaming's
-    direct import)."""
-    from ..streaming import clamped_shuffle
-
-    return clamped_shuffle(spark, n)
 
 
 @query(
@@ -906,6 +893,45 @@ def events_absence_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# stream==batch equivalence rows: each replays its batches through
+# `streaming.replay`, imported at call time (when ``streaming`` is the entry
+# module it imports ``queries`` → operator registration → this module, and a
+# top-level import back into the half-initialized package would fail)
+
+
+def _event_tertiles(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The events corpus as three event-time-ordered tertile batches
+    (ntile over (ts, event_id): every batch-k timestamp ≤ every batch-k+1
+    timestamp), ``ts`` cast to the TIMESTAMP the streaming watermarks and
+    ``unix_micros`` take.  The split is cut once: each batch write
+    re-executes its lineage, and the single-partition global sort would
+    otherwise run once per tertile."""
+    ev = t(spark, sf_dir, "events").select(
+        F.col("ts").cast("timestamp").alias("ts"),
+        "event_id",
+        "user_id",
+        "event_type",
+    )
+    tiled = cut_lineage(
+        ev.withColumn("_tile", F.ntile(3).over(Window.orderBy("ts", "event_id")))
+    )
+    return [tiled.filter(F.col("_tile") == i).drop("_tile") for i in (1, 2, 3)]
+
+
+def _flush_batch(last: DataFrame) -> DataFrame:
+    """One no-op sentinel event (ids -1, type ``flush``) ten days after
+    ``last``'s latest: replayed after the data batches, it advances the
+    watermark past every pending deadline and session gap, so every timer
+    fires and every real session closes."""
+    return last.agg(F.max("ts").alias("m")).select(
+        (F.col("m") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
+        F.lit(-1).cast("long").alias("event_id"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit("flush").alias("event_type"),
+    )
+
+
 @query(
     "streaming_state_totals_equivalence",
     oracle="""
@@ -942,104 +968,62 @@ def streaming_state_totals_equivalence(
 
     Reference basis: extends §2.8 (the reference's aggregate machinery
     aggregate/mod.rs:30-235 is one-shot; no state store exists)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..streaming import replay
 
     ev = t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.floor(F.col("value") * 1000).cast("long").alias("qv"),
     )
-    root = _tempfile.mkdtemp(prefix="nqes_stream_state_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in range(3):
-            d = _os.path.join(src_dir, f"b{i}")
-            ev.filter(F.col("event_id") % 3 == i).select(
-                "user_id", "qv"
-            ).coalesce(1).write.parquet(d)
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
 
-        def update(key, pdfs, state: GroupState):
-            n, tot = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                tot += int(pdf["qv"].sum())
-            state.update((n, tot))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_qv": [tot],
-                }
-            )
-
-        totals = (
-            spark.readStream.schema("user_id long, qv long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                update,
-                outputStructType="user_id long, n_events long, total_qv long",
-                stateStructType="n long, total long",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    def update(key, pdfs, state: GroupState):
+        n, tot = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            n += len(pdf)
+            tot += int(pdf["qv"].sum())
+        state.update((n, tot))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "total_qv": [tot],
+            }
         )
-        # No driver-side fold (VERDICT r11 #2): every micro-batch's
-        # update-mode emissions land in a per-batch parquet sink (the
-        # `cm_merge_sink` pattern) stamped with the batch id, and
-        # latest-wins is a Spark window below — emissions scale with
-        # touched users, so they must never funnel through the driver.
-        sink_dir = _os.path.join(root, "emsink")
 
-        def tick(batch_df: DataFrame, bid: int) -> None:
-            # overwrite THIS batch's dir (the cm_merge_sink exactly-once
-            # recipe): a replayed batch after a checkpoint restart lands
-            # on the same path instead of double-appending
-            batch_df.withColumn("_bid", F.lit(bid)).write.mode(
-                "overwrite"
-            ).parquet(_os.path.join(sink_dir, f"b={bid}"))
-
-        with _clamped_shuffle(spark):
-            q = (
-                totals.writeStream.foreachBatch(tick)
-                .outputMode("update")
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("state-totals stream did not terminate")
-        em = spark.read.schema(
-            "user_id long, n_events long, total_qv long, _bid long"
-        ).parquet(_os.path.join(sink_dir, "b=*"))
-        n_batches = em.select("_bid").distinct().count()  # ≤ n_files — bounded
-        if n_batches != 3:
-            raise RuntimeError(f"expected 3 micro-batches, got {n_batches}")
-        # update-mode applyInPandasWithState emits ≤1 row per key per
-        # micro-batch, so (user_id, _bid) is unique and row_number is
-        # deterministic: keep each user's LAST emission (final state).
-        w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
-        final = (
-            em.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", "n_events", "total_qv")
-        )
-        # materialize off the temp sink dir before `finally` removes it
-        return final.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+    # No driver-side fold (VERDICT r11 #2): every micro-batch's
+    # update-mode emissions land in the replay's per-batch sink, and
+    # latest-wins is a Spark window below — emissions scale with touched
+    # users, so they must never funnel through the driver.
+    em = replay(
+        spark,
+        [
+            ev.filter(F.col("event_id") % 3 == i).select("user_id", "qv")
+            for i in range(3)
+        ],
+        pipeline=lambda source: source()
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType="user_id long, n_events long, total_qv long",
+            stateStructType="n long, total long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        output_mode="update",
+    )
+    # update-mode applyInPandasWithState emits ≤1 row per key per
+    # micro-batch, so (user_id, batch_id) is unique and row_number is
+    # deterministic: keep each user's LAST emission (final state).
+    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
+    return (
+        em.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("user_id", "n_events", "total_qv")
+    )
 
 
 @query(
@@ -1095,90 +1079,18 @@ def streaming_absence_timeout_equivalence(
 
     Reference basis: extends §2.8 (no timers, no state store, no
     watermarks anywhere in the reference)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    from ..streaming import absence_timeouts, replay
 
-    from ..streaming import absence_timeouts
-
-    ev = t(spark, sf_dir, "events").select(
-        "ts", "event_id", "user_id", "event_type"
-    )
-    # materialize the ntile split ONCE: each per-tile write re-executes
-    # this frame's lineage, and the single-partition global sort would
-    # otherwise run once per tertile file written
-    tiled = cut_lineage(
-        ev.withColumn(
-            "_tile", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        )
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]  # 1 row
-    root = _tempfile.mkdtemp(prefix="nqes_stream_absence_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in (1, 2, 3):
-            d = _os.path.join(src_dir, f"b{i}")
-            tiled.filter(F.col("_tile") == i).drop("_tile").coalesce(
-                1
-            ).write.parquet(d)
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
-        flush = spark.createDataFrame(
-            [(max_ts, -1, -1, "flush")],
-            "ts timestamp, event_id long, user_id long, event_type string",
-        ).select(
-            (F.col("ts") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
-            "event_id",
-            "user_id",
-            "event_type",
-        )
-        d = _os.path.join(src_dir, "b4")
-        flush.coalesce(1).write.parquet(d)
-        for name in _os.listdir(d):
-            _os.utime(_os.path.join(d, name), (1_700_000_000 + 40,) * 2)
-
-        # No driver-side collect (VERDICT r11 #2): decided views scale
-        # with the corpus, so each batch's append-mode emissions go to a
-        # parquet sink; append mode is exactly-once, so the result is
-        # simply the sink's union — no fold at all.
-        sink_dir = _os.path.join(root, "emsink")
-
-        def tick(batch_df: DataFrame, _bid: int) -> None:
-            # overwrite THIS batch's dir (exactly-once on replay; the
-            # append-mode union is otherwise double-counted if a batch
-            # re-delivers after a checkpoint restart)
-            batch_df.write.mode("overwrite").parquet(
-                _os.path.join(sink_dir, f"b={_bid}")
-            )
-
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_id long, user_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-        )
-        with _clamped_shuffle(spark):
-            q = (
-                absence_timeouts(stream)
-                .writeStream.foreachBatch(tick)
-                .outputMode("append")
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("absence stream did not terminate")
-        out = spark.read.schema(
-            "view_event_id long, user_id long, view_ts_us long, outcome string"
-        ).parquet(_os.path.join(sink_dir, "b=*"))
-        # materialize off the temp sink dir before `finally` removes it
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+    # No driver-side collect (VERDICT r11 #2): decided views scale with
+    # the corpus, so each batch's append-mode emissions go to the
+    # replay's sink; append mode is exactly-once, so the result is simply
+    # the sink's union — no fold at all.
+    tiles = _event_tertiles(spark, sf_dir)
+    return replay(
+        spark,
+        tiles + [_flush_batch(tiles[-1])],
+        pipeline=lambda source: absence_timeouts(source()),
+    ).select("view_event_id", "user_id", "view_ts_us", "outcome")
 
 
 @query(
@@ -1234,74 +1146,27 @@ def streaming_cep_alerts_equivalence(
     Reference basis: extends §2.8 (no streams, no state store, no
     pattern matching in the reference; the funnel family
     src/physical_plan/aggregate/mod.rs:30-235 is one-shot batch)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from ..streaming import cep_pattern_alerts
+    from ..streaming import cep_pattern_alerts, replay
 
     ev = t(spark, sf_dir, "events").select(
         "ts", "event_id", "user_id", "event_type"
     )
-    root = _tempfile.mkdtemp(prefix="nqes_stream_cep_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in range(3):
-            d = _os.path.join(src_dir, f"b{i}")
-            ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(d)
-            # deterministic FileStreamSource order (mod-time stamped);
-            # the latest-wins contract is interleaving-invariant anyway
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
-        sink_dir = _os.path.join(root, "emsink")
-
-        def tick(batch_df: DataFrame, _bid: int) -> None:
-            # overwrite THIS batch's dir (exactly-once on replay; the
-            # append-mode union is otherwise double-counted if a batch
-            # re-delivers after a checkpoint restart)
-            batch_df.write.mode("overwrite").parquet(
-                _os.path.join(sink_dir, f"b={_bid}")
-            )
-
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_id long, user_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
+    em = replay(
+        spark,
+        [ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        pipeline=lambda source: cep_pattern_alerts(source()),
+        output_mode="update",
+    )
+    # LATEST-WINS consumer contract: the max-version row set per user is
+    # the current match set; drop the sentinel NULL rows
+    w = Window.partitionBy("user_id")
+    return (
+        em.withColumn("_vmax", F.max("version").over(w))
+        .filter(
+            (F.col("version") == F.col("_vmax")) & F.col("pattern").isNotNull()
         )
-        with _clamped_shuffle(spark):
-            q = (
-                cep_pattern_alerts(stream)
-                .writeStream.foreachBatch(tick)
-                .outputMode("update")
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("cep stream did not terminate")
-        em = spark.read.schema(
-            "user_id long, version long, pattern string"
-        ).parquet(_os.path.join(sink_dir, "b=*"))
-        # LATEST-WINS consumer contract: the max-version row set per
-        # user is the current match set; drop the sentinel NULL rows
-        w = Window.partitionBy("user_id")
-        out = (
-            em.withColumn("_vmax", F.max("version").over(w))
-            .filter(
-                (F.col("version") == F.col("_vmax"))
-                & F.col("pattern").isNotNull()
-            )
-            .select("user_id", "pattern")
-        )
-        # materialize off the temp sink dir before `finally` removes it
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+        .select("user_id", "pattern")
+    )
 
 
 @query(
@@ -1364,89 +1229,23 @@ def streaming_sessionize_equivalence(
     Reference basis: extends §2.8 (the reference has no windows, no
     watermarks, no state store; its aggregate machinery
     src/physical_plan/aggregate/mod.rs:30-235 is one-shot batch)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    from ..streaming import replay, sessionized
 
-    from ..streaming import sessionized
-
-    ev = t(spark, sf_dir, "events").select(
-        "ts", "event_id", "user_id", "event_type"
-    )
-    # materialize the ntile split ONCE: each per-tile write re-executes
-    # this frame's lineage, and the single-partition global sort would
-    # otherwise run once per tertile file written
-    tiled = cut_lineage(
-        ev.withColumn(
-            "_tile", F.ntile(3).over(Window.orderBy("ts", "event_id"))
+    tiles = _event_tertiles(spark, sf_dir)
+    return (
+        replay(
+            spark,
+            tiles + [_flush_batch(tiles[-1])],
+            pipeline=lambda source: sessionized(source()),
         )
-    )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]  # 1 row
-    root = _tempfile.mkdtemp(prefix="nqes_stream_sess_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in (1, 2, 3):
-            d = _os.path.join(src_dir, f"b{i}")
-            tiled.filter(F.col("_tile") == i).drop("_tile").coalesce(
-                1
-            ).write.parquet(d)
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
-        flush = spark.createDataFrame(
-            [(max_ts, -1, -1, "flush")],
-            "ts timestamp, event_id long, user_id long, event_type string",
-        ).select(
-            (F.col("ts") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
-            "event_id",
+        .filter(F.col("user_id") >= 0)  # belt: sentinel never emits
+        .select(
             "user_id",
-            "event_type",
+            F.date_format("session_start", TS_FMT).alias("session_start"),
+            F.date_format("session_end", TS_FMT).alias("session_end"),
+            "n_events",
         )
-        d = _os.path.join(src_dir, "b4")
-        flush.coalesce(1).write.parquet(d)
-        for name in _os.listdir(d):
-            _os.utime(_os.path.join(d, name), (1_700_000_000 + 40,) * 2)
-
-        sink_dir = _os.path.join(root, "emsink")
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_id long, user_id long, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-        )
-        with _clamped_shuffle(spark):
-            q = (
-                sessionized(stream)
-                .writeStream.format("parquet")
-                .option("path", sink_dir)
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("sessionize stream did not terminate")
-        out = (
-            spark.read.schema(
-                "user_id long, session_start timestamp, "
-                "session_end timestamp, n_events long"
-            )
-            .parquet(sink_dir)
-            .filter(F.col("user_id") >= 0)  # belt: sentinel never emits
-            .select(
-                "user_id",
-                F.date_format("session_start", TS_FMT).alias("session_start"),
-                F.date_format("session_end", TS_FMT).alias("session_end"),
-                "n_events",
-            )
-        )
-        # materialize off the temp sink dir before `finally` removes it
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 @query(
@@ -1498,77 +1297,19 @@ def streaming_stream_join_equivalence(
     Reference basis: extends §2.8 (the reference's join machinery
     src/physical_plan/join/ is one-shot batch hash join; no streams,
     no state)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    from ..streaming import purchases_after_clicks, replay
 
-    from ..streaming import purchases_after_clicks
-
-    ev = t(spark, sf_dir, "events").select(
-        "ts", "event_id", "user_id", "event_type"
+    return replay(
+        spark,
+        _event_tertiles(spark, sf_dir),
+        pipeline=lambda source: purchases_after_clicks(source(), source()),
+    ).select(
+        "p_user",
+        "purchase_id",
+        "click_id",
+        F.unix_micros("purchase_ts").alias("purchase_ts_us"),
+        F.unix_micros("click_ts").alias("click_ts_us"),
     )
-    # materialize the ntile split ONCE: each per-tile write re-executes
-    # this frame's lineage, and the single-partition global sort would
-    # otherwise run once per tertile file written
-    tiled = cut_lineage(
-        ev.withColumn(
-            "_tile", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        )
-    )
-    root = _tempfile.mkdtemp(prefix="nqes_stream_ssjoin_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in (1, 2, 3):
-            d = _os.path.join(src_dir, f"b{i}")
-            tiled.filter(F.col("_tile") == i).drop("_tile").coalesce(
-                1
-            ).write.parquet(d)
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
-
-        def src() -> DataFrame:
-            return (
-                spark.readStream.schema(
-                    "ts timestamp, event_id long, user_id long, "
-                    "event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(_os.path.join(src_dir, "b*"))
-            )
-
-        sink_dir = _os.path.join(root, "emsink")
-        # A stream-stream join runs ~5 stateful stages per micro-batch —
-        # the clamp matters most here (93 s → 33 s at sf0.01 bare)
-        with _clamped_shuffle(spark):
-            q = (
-                purchases_after_clicks(src(), src())
-                .select(
-                    "p_user",
-                    "purchase_id",
-                    "click_id",
-                    F.unix_micros("purchase_ts").alias("purchase_ts_us"),
-                    F.unix_micros("click_ts").alias("click_ts_us"),
-                )
-                .writeStream.format("parquet")
-                .option("path", sink_dir)
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("stream-stream join did not terminate")
-        out = spark.read.schema(
-            "p_user long, purchase_id long, click_id long, "
-            "purchase_ts_us long, click_ts_us long"
-        ).parquet(sink_dir)
-        # materialize off the temp sink dir before `finally` removes it
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -1611,70 +1352,15 @@ def streaming_dedup_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference basis: extends §2.8; the reference has no dedup operator
     at all (its DISTINCT is declared-unimplemented, SURVEY §2.4)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    from ..streaming import deduplicated, replay
 
-    from ..streaming import deduplicated
-
-    ev = t(spark, sf_dir, "events").select(
-        "ts", "event_id", "user_id", "event_type"
+    return replay(
+        spark,
+        [tile for tile in _event_tertiles(spark, sf_dir) for _copy in range(2)],
+        pipeline=lambda source: deduplicated(source(), keys=["event_id"]),
+    ).select(
+        "event_id",
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "event_type",
     )
-    # materialize the ntile split ONCE: each per-tile write re-executes
-    # this frame's lineage, and the single-partition global sort would
-    # otherwise run once per tertile file written
-    tiled = cut_lineage(
-        ev.withColumn(
-            "_tile", F.ntile(3).over(Window.orderBy("ts", "event_id"))
-        )
-    )
-    root = _tempfile.mkdtemp(prefix="nqes_stream_dedup_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        seq = 0
-        for i in (1, 2, 3):
-            part = tiled.filter(F.col("_tile") == i).drop("_tile")
-            for copy in ("orig", "dup"):
-                d = _os.path.join(src_dir, f"b{i}_{copy}")
-                part.coalesce(1).write.parquet(d)
-                seq += 1
-                for name in _os.listdir(d):
-                    _os.utime(
-                        _os.path.join(d, name),
-                        (1_700_000_000 + seq * 10,) * 2,
-                    )
-        sink_dir = _os.path.join(root, "emsink")
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_id long, user_id long, "
-                "event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-        )
-        with _clamped_shuffle(spark):
-            q = (
-                deduplicated(stream, keys=["event_id"])
-                .select(
-                    "event_id",
-                    "user_id",
-                    F.unix_micros("ts").alias("ts_us"),
-                    "event_type",
-                )
-                .writeStream.format("parquet")
-                .option("path", sink_dir)
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("dedup stream did not terminate")
-        out = spark.read.schema(
-            "event_id long, user_id long, ts_us long, event_type string"
-        ).parquet(sink_dir)
-        # materialize off the temp sink dir before `finally` removes it
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)

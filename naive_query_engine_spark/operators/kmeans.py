@@ -1874,32 +1874,27 @@ def dedup_on_ingest(
     qf = arrivals.select(
         "vec_id", quantized(F.col("embedding")).alias("q")
     ).withColumn("nrm2", dot_q(F.col("q"), F.col("q")))
-    probe = _assign_to_cells(qf, centroids).select(
-        F.col("vec_id").alias("arrival_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm2").alias("qn2"),
-        "cell",
-    )
     corpus = s.table(f"{table}_assign")
-    return _admit_verdicts(probe, corpus, tau, intra_batch=intra_batch)
+    return _admit_verdicts(
+        _assign_to_cells(qf, centroids), corpus, tau, intra_batch=intra_batch
+    )
 
 
 def _admit_verdicts(
-    probe: DataFrame,
+    arrivals: DataFrame,
     corpus: DataFrame,
     tau: float,
     intra_batch: bool = False,
 ) -> DataFrame:
     """The τ-twin verdict core shared by the table-path admit gate
     (`dedup_on_ingest`) and its registered driver query
-    (`dedup_ingest_admit_gate`): probe rows (arrival_id, qq, qn2, cell)
-    vs corpus rows (vec_id, q, nrm2, cell) → one verdict row per
-    arrival.  Cell-keyed join (probe side is the only exchange), one
-    descending window per arrival for the best-twin argmax.
+    (`dedup_ingest_admit_gate`): arrival rows vs corpus rows, both
+    (vec_id, q, nrm2, cell), → one verdict row per arrival.  Cell-keyed
+    join (probe side is the only exchange), one descending window per
+    arrival for the best-twin argmax.
 
     ``intra_batch=True`` adds the INTRA-BATCH candidate set — the
-    probe itself (renamed corpus-shaped HERE, so every caller gets the
-    same frame by construction), gated lowest-id-wins: a batch row
+    arrivals themselves, gated lowest-id-wins: a batch row
     competes for arrival a only when its vec_id < a (VERDICT r9 #3).
     One pass, no iteration: arrival a's candidates are corpus ∪ ALL
     lower-id batch peers (admitted or not), so a mid-chain rejected
@@ -1916,13 +1911,13 @@ def _admit_verdicts(
 
     cand = corpus.withColumn("_peer", F.lit(False))
     if intra_batch:
-        peers = probe.select(
-            F.col("arrival_id").alias("vec_id"),
-            F.col("qq").alias("q"),
-            F.col("qn2").alias("nrm2"),
-            "cell",
-        )
-        cand = cand.unionByName(peers.withColumn("_peer", F.lit(True)))
+        cand = cand.unionByName(arrivals.withColumn("_peer", F.lit(True)))
+    probe = arrivals.select(
+        F.col("vec_id").alias("arrival_id"),
+        F.col("q").alias("qq"),
+        F.col("nrm2").alias("qn2"),
+        "cell",
+    )
     cos = cosine_q(dot_q(F.col("qq"), F.col("q")), F.col("qn2"), F.col("nrm2"))
     scored = (
         probe.join(cand, "cell")
@@ -2191,13 +2186,8 @@ def dedup_ingest_canonical_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = assign.filter(F.expr(_UPSERT_TRAIN_PRED)).select(
         "vec_id", "q", "nrm2", "cell"
     )
-    probe = assign.filter(~F.expr(_UPSERT_TRAIN_PRED)).select(
-        F.col("vec_id").alias("arrival_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm2").alias("qn2"),
-        "cell",
-    )
-    v = _admit_verdicts(probe, base, COSINE_THRESHOLD, intra_batch=True)
+    arrivals = assign.filter(~F.expr(_UPSERT_TRAIN_PRED))
+    v = _admit_verdicts(arrivals, base, COSINE_THRESHOLD, intra_batch=True)
     return resolve_dup_roots(v).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         "is_duplicate",
@@ -2237,29 +2227,15 @@ def dedup_ingest_admit_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash_join.rs:43-289)."""
     assign, _ = _frozen_assignment(spark, sf_dir)
     base = assign.filter(F.expr(_UPSERT_TRAIN_PRED))
-    probe = assign.filter(~F.expr(_UPSERT_TRAIN_PRED)).select(
-        F.col("vec_id").alias("arrival_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm2").alias("qn2"),
-        "cell",
-    )
+    arrivals = assign.filter(~F.expr(_UPSERT_TRAIN_PRED))
     from .similarity import COSINE_THRESHOLD
 
-    return _admit_verdicts(probe, base, COSINE_THRESHOLD).select(
+    return _admit_verdicts(arrivals, base, COSINE_THRESHOLD).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         "is_duplicate",
         F.col("dup_of").cast("long").alias("dup_of"),
         "best_cosine",
     )
-
-
-def _growk_assignment(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, dict]:
-    """`_frozen_assignment` at the PRODUCTION K — a thin alias for
-    ``_frozen_assignment(spark, sf_dir, growk=True)`` kept as the
-    named entry point the grow-K gate and tests import."""
-    return _frozen_assignment(spark, sf_dir, growk=True)
 
 
 def _admit_gate_growk_oracle(iters: int = KMEANS_ITERS) -> str:
@@ -2367,17 +2343,12 @@ def dedup_ingest_admit_gate_growk(spark: SparkSession, sf_dir: str) -> DataFrame
     Reference basis: extends the §2.8 extension surface (the reference
     has no streaming/ANN plane; its join machinery is
     hash_join.rs:43-289)."""
-    assign, _ = _growk_assignment(spark, sf_dir)
+    assign, _ = _frozen_assignment(spark, sf_dir, growk=True)
     base = assign.filter(F.expr(_UPSERT_TRAIN_PRED))
-    probe = assign.filter(~F.expr(_UPSERT_TRAIN_PRED)).select(
-        F.col("vec_id").alias("arrival_id"),
-        F.col("q").alias("qq"),
-        F.col("nrm2").alias("qn2"),
-        "cell",
-    )
+    arrivals = assign.filter(~F.expr(_UPSERT_TRAIN_PRED))
     from .similarity import COSINE_THRESHOLD
 
-    return _admit_verdicts(probe, base, COSINE_THRESHOLD).select(
+    return _admit_verdicts(arrivals, base, COSINE_THRESHOLD).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         "is_duplicate",
         F.col("dup_of").cast("long").alias("dup_of"),
@@ -3087,10 +3058,11 @@ def _assign_partition_file_counts(
     import os
     from urllib.parse import urlparse
 
+    # collect the command's rows as they are: a DataFrame filter on
+    # them would run a Spark job, picking the row here runs none
+    desc = spark.sql(f"DESCRIBE FORMATTED {table}_assign").collect()
     loc = urlparse(
-        spark.sql(f"DESCRIBE FORMATTED {table}_assign")
-        .filter("col_name = 'Location'")
-        .collect()[0]["data_type"]
+        next(r["data_type"] for r in desc if r["col_name"] == "Location")
     ).path
     entries = (
         [f"cell={c}" for c in cells]
@@ -3223,7 +3195,6 @@ def repair_ivf_vector_index(
         .filter(F.col("cell").isin(cells))  # partition-pruned
         .select("vec_id", "q", "nrm2")
     )
-    n_members = members.count()
     # |cells| fresh centroids on the pool; relabel 0..k-1 -> the repaired
     # cell ids so partition layout and oracle tie-breaks stay aligned
     trained = train_centroids(
@@ -3234,6 +3205,14 @@ def repair_ivf_vector_index(
     new_edges = cut_lineage(
         cell_mutual_knn_edges(new_assign, int(conf["top_k"]), with_cell=True)
     )
+    # per-cell row counts, bounded by |cells|: the assignment is row-local,
+    # so its counts sum to the pool size
+    assign_counts = {
+        r["cell"]: r["count"] for r in new_assign.groupBy("cell").count().collect()
+    }
+    edge_counts = {
+        r["cell"]: r["count"] for r in new_edges.groupBy("cell").count().collect()
+    }
     # hybrid centroid table: frozen rows for untouched cells + refreshed
     old = {
         r["c_label"]: list(r["centroid"])
@@ -3249,12 +3228,10 @@ def repair_ivf_vector_index(
         new_edges.select("vec_a", "vec_b", "cell").write.insertInto(
             table, overwrite=True
         )
-        present_a = {r["cell"] for r in new_assign.select("cell").distinct().collect()}
-        present_e = {r["cell"] for r in new_edges.select("cell").distinct().collect()}
         _clear_partitions(
-            s, f"{table}_assign", [c for c in cells if c not in present_a]
+            s, f"{table}_assign", [c for c in cells if c not in assign_counts]
         )
-        _clear_partitions(s, table, [c for c in cells if c not in present_e])
+        _clear_partitions(s, table, [c for c in cells if c not in edge_counts])
     finally:
         s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     s.createDataFrame(
@@ -3263,8 +3240,8 @@ def repair_ivf_vector_index(
     ).write.mode("overwrite").saveAsTable(f"{table}_centroids")
     return {
         "repaired_cells": cells,
-        "n_members": n_members,
-        "n_edges_written": new_edges.count(),
+        "n_members": sum(assign_counts.values()),
+        "n_edges_written": sum(edge_counts.values()),
     }
 
 
@@ -3578,14 +3555,9 @@ def similarity_ivf_maintenance_tick(
     out: DataFrame | None = None
     n_batches = len(_UPSERT_BATCH_PREDS)
     for i, pred in enumerate(_UPSERT_BATCH_PREDS, start=1):
-        probe = assign.filter(F.expr(pred)).select(
-            F.col("vec_id").alias("arrival_id"),
-            F.col("q").alias("qq"),
-            F.col("nrm2").alias("qn2"),
-            "cell",
-        )
+        arrivals = assign.filter(F.expr(pred))
         v = _admit_verdicts(
-            probe, corpus, COSINE_THRESHOLD, intra_batch=True
+            arrivals, corpus, COSINE_THRESHOLD, intra_batch=True
         ).select(
             F.col("vec_id").cast("long").alias("vec_id"),
             F.lit(i).cast("long").alias("batch"),
@@ -3606,16 +3578,8 @@ def similarity_ivf_maintenance_tick(
             v = cut_lineage(v)
         out = v if out is None else out.unionByName(v)
         if i < n_batches:
-            admitted = probe.join(
-                v.filter(~F.col("is_duplicate")).select(
-                    F.col("vec_id").alias("arrival_id")
-                ),
-                "arrival_id",
-            ).select(
-                F.col("arrival_id").alias("vec_id"),
-                F.col("qq").alias("q"),
-                F.col("qn2").alias("nrm2"),
-                "cell",
+            admitted = arrivals.join(
+                v.filter(~F.col("is_duplicate")).select("vec_id"), "vec_id"
             )
             corpus = corpus.unionByName(admitted)
     return out
@@ -3633,9 +3597,9 @@ def streaming_tick_batch_equivalence(
     Streaming engine as a driver row (VERDICT r10 #8: the streaming
     twins were pytest-pinned but never driver-sampled).  The two tick
     batches are written as parquet files with strictly increasing
-    mod-times, read back via ``readStream`` + ``maxFilesPerTrigger=1``
-    (so the FileStreamSource's mod-time ordering reproduces the fold's
-    batch boundaries), and folded in ``foreachBatch``: each micro-batch
+    mod-times, replayed one micro-batch each (`streaming.replay`, so
+    the file source's mod-time ordering reproduces the fold's batch
+    boundaries), and folded in ``foreachBatch``: each micro-batch
     is re-quantized from raw embeddings (``quantized`` + ``dot_q`` —
     the ingest-path arithmetic of `dedup_on_ingest`), assigned under
     the frozen base quantizer, verdicted with the intra-batch pre-pass,
@@ -3645,109 +3609,46 @@ def streaming_tick_batch_equivalence(
     batch-fold SQL, so hash equality IS the stream==batch claim at the
     driver's own surface: a stream whose micro-batch boundaries,
     ordering, or state handoff diverged from the sequential fold would
-    mismatch.  Verdict rows are collected per micro-batch (bounded by
-    the BATCH size, never corpus-sized — the foreachBatch sink is
-    driver-side by definition) and re-emitted as one DataFrame so the
-    returned frame is independent of the temp stream dirs, which are
-    removed before returning.
+    mismatch.  Each micro-batch's verdicts go to the replay's per-batch
+    sink (batch-sized, never collected to the driver); ``batch`` is the
+    sink's ``batch_id`` + 1.
 
     Reference basis: extends §2.8 (the reference engine is one-shot
     batch; its datasource registry datasource/mod.rs:20-28 has no
     ingest path, no streams)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    from ..streaming import replay
     from .similarity import COSINE_THRESHOLD, dot_q, quantized
 
     assign, cents = _frozen_assignment(spark, sf_dir)
-    base = cut_lineage(
+    corpus = cut_lineage(
         assign.filter(F.expr(_UPSERT_TRAIN_PRED)).select(
             "vec_id", "q", "nrm2", "cell"
         )
     )
+
+    def tick(batch_df: DataFrame, _bid: int) -> DataFrame:
+        nonlocal corpus
+        qf = batch_df.select(
+            "vec_id", quantized(F.col("embedding")).alias("q")
+        ).withColumn("nrm2", dot_q(F.col("q"), F.col("q")))
+        arrivals = _assign_to_cells(qf, cents)
+        v = _admit_verdicts(arrivals, corpus, COSINE_THRESHOLD, intra_batch=True)
+        admitted = arrivals.join(
+            v.filter(~F.col("is_duplicate")).select("vec_id"), "vec_id"
+        )
+        corpus = cut_lineage(corpus.unionByName(admitted))
+        return v
+
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = _tempfile.mkdtemp(prefix="nqes_stream_tick_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i, pred in enumerate(_UPSERT_BATCH_PREDS, start=1):
-            d = _os.path.join(src_dir, f"b{i}")
-            emb.filter(F.expr(pred)).coalesce(1).write.parquet(d)
-            # FileStreamSource orders by modification time; stamp each
-            # batch's files explicitly so batch 1 always folds first
-            # (no sleep, no filesystem-clock dependence)
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name),
-                    (1_700_000_000 + i * 10,) * 2,
-                )
-        state = {"corpus": base, "batch": 0, "rows": []}
-
-        def tick(batch_df: DataFrame, _bid: int) -> None:
-            state["batch"] += 1
-            qf = batch_df.select(
-                "vec_id", quantized(F.col("embedding")).alias("q")
-            ).withColumn("nrm2", dot_q(F.col("q"), F.col("q")))
-            probe = _assign_to_cells(qf, cents).select(
-                F.col("vec_id").alias("arrival_id"),
-                F.col("q").alias("qq"),
-                F.col("nrm2").alias("qn2"),
-                "cell",
-            )
-            v = _admit_verdicts(
-                probe, state["corpus"], COSINE_THRESHOLD, intra_batch=True
-            )
-            rows = v.collect()  # batch-sized verdicts, never corpus
-            state["rows"] += [
-                (
-                    r["vec_id"],
-                    state["batch"],
-                    r["is_duplicate"],
-                    r["dup_of"],
-                    r["best_cosine"],
-                )
-                for r in rows
-            ]
-            admitted = probe.join(
-                v.filter(~F.col("is_duplicate")).select(
-                    F.col("vec_id").alias("arrival_id")
-                ),
-                "arrival_id",
-            ).select(
-                F.col("arrival_id").alias("vec_id"),
-                F.col("qq").alias("q"),
-                F.col("qn2").alias("nrm2"),
-                "cell",
-            )
-            state["corpus"] = cut_lineage(
-                state["corpus"].unionByName(admitted)
-            )
-
-        q = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-            .writeStream.foreachBatch(tick)
-            .option("checkpointLocation", _os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-        if not finished:
-            q.stop()
-            raise RuntimeError("stream tick did not terminate in 600s")
-        if state["batch"] != len(_UPSERT_BATCH_PREDS):
-            raise RuntimeError(
-                f"expected {len(_UPSERT_BATCH_PREDS)} micro-batches, "
-                f"got {state['batch']}"
-            )
-        return spark.createDataFrame(
-            state["rows"],
-            "vec_id long, batch long, is_duplicate boolean, "
-            "dup_of long, best_cosine double",
-        )
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+    return replay(
+        spark, [emb.filter(F.expr(pred)) for pred in _UPSERT_BATCH_PREDS], tick
+    ).select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        (F.col("batch_id") + 1).cast("long").alias("batch"),
+        "is_duplicate",
+        F.col("dup_of").cast("long").alias("dup_of"),
+        "best_cosine",
+    )
 
 
 @query(

@@ -996,12 +996,12 @@ def streaming_countmin_sink_equivalence(
     driver row (VERDICT r10 #8, second streaming path — a stateless
     mergeable-sketch sink, where `streaming_tick_batch_equivalence` is a
     stateful closure fold): event user_ids are split into three
-    micro-batch files, folded through ``readStream`` + ``foreachBatch``
-    with the production `cm_merge_sink` (each batch reduced to its ≤ d×w
-    counter PARTIAL and written to its own ``batch_id=N`` dir with
-    OVERWRITE — the exactly-once replay recipe), then the merged sketch
-    (counter-wise SUM over partials, `cm_merged_sketch`) answers every
-    key's frequency probe.
+    micro-batch files, replayed through ``foreachBatch``
+    (`streaming.replay`) with the production `cm_counter_partials` (each
+    batch reduced to its ≤ d×w counter PARTIAL and written to its own
+    ``batch_id=N`` dir with OVERWRITE — the exactly-once replay recipe of
+    `cm_merge_sink`), then the merged sketch (counter-wise SUM over
+    partials, as `cm_merged_sketch`) answers every key's frequency probe.
 
     The oracle is the BATCH `sketch_countmin_freq` SQL verbatim, so hash
     equality is the mergeability claim at the driver's surface: a
@@ -1016,67 +1016,39 @@ def streaming_countmin_sink_equivalence(
 
     Reference basis: extends §2.8 (no streams in the reference;
     aggregation machinery aggregate/mod.rs:30-235 is one-shot)."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from ..streaming import cm_merge_sink, cm_merged_sketch
+    from ..streaming import cm_counter_partials, replay
 
     ev = t(spark, sf_dir, "events")
-    root = _tempfile.mkdtemp(prefix="nqes_stream_cm_")
-    try:
-        src_dir = _os.path.join(root, "arrivals")
-        for i in range(3):
-            d = _os.path.join(src_dir, f"b{i}")
-            ev.filter(F.col("event_id") % 3 == i).select("user_id").coalesce(
-                1
-            ).write.parquet(d)
-            # deterministic FileStreamSource order (mod-time stamped);
-            # the SUM merge is order-invariant anyway — stamping just
-            # keeps the micro-batch count reproducible
-            for name in _os.listdir(d):
-                _os.utime(
-                    _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                )
-        sink_dir = _os.path.join(root, "sketch")
-        q = (
-            spark.readStream.schema("user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(src_dir, "b*"))
-            .writeStream.foreachBatch(cm_merge_sink(sink_dir))
-            .option("checkpointLocation", _os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    # each batch's partial lands in the replay's batch_id=N sink with
+    # OVERWRITE (the `cm_merge_sink` recipe); the merge is the
+    # counter-wise SUM of `cm_merged_sketch`
+    counters = (
+        replay(
+            spark,
+            [ev.filter(F.col("event_id") % 3 == i).select("user_id") for i in range(3)],
+            lambda batch_df, _: cm_counter_partials(batch_df),
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("count-min sink stream did not terminate")
-        counters = cm_merged_sketch(spark, sink_dir)
-        truth = ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("long").alias("true_cnt")
-        )
-        probe = truth.select(
-            "user_id",
-            _seed_rows(F.col("user_id"), CM_SEEDS, CM_HEX_DIGITS).alias("sp"),
-        ).select("user_id", "sp.seed", "sp.pos")
-        est = (
-            probe.join(F.broadcast(counters), ["seed", "pos"])  # d*w — bounded
-            .groupBy("user_id")
-            .agg(F.min("cnt").cast("long").alias("cm_est"))
-        )
-        out = truth.join(est, "user_id").select(
-            "user_id",
-            "true_cnt",
-            "cm_est",
-            (F.col("cm_est") - F.col("true_cnt")).cast("long").alias("overcount"),
-        )
-        # materialize off the temp sketch dir before `finally` removes
-        # it — localCheckpoint keeps the partitions executor-side, so
-        # the per-distinct-user report never funnels through the driver
-        # (VERDICT r11 #2)
-        return out.localCheckpoint(eager=True)
-    finally:
-        _shutil.rmtree(root, ignore_errors=True)
+        .groupBy("seed", "pos")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    truth = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("true_cnt")
+    )
+    probe = truth.select(
+        "user_id",
+        _seed_rows(F.col("user_id"), CM_SEEDS, CM_HEX_DIGITS).alias("sp"),
+    ).select("user_id", "sp.seed", "sp.pos")
+    est = (
+        probe.join(F.broadcast(counters), ["seed", "pos"])  # d*w — bounded
+        .groupBy("user_id")
+        .agg(F.min("cnt").cast("long").alias("cm_est"))
+    )
+    return truth.join(est, "user_id").select(
+        "user_id",
+        "true_cnt",
+        "cm_est",
+        (F.col("cm_est") - F.col("true_cnt")).cast("long").alias("overcount"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1302,11 +1274,12 @@ def streaming_bloom_admit_equivalence(
     """The Bloom admit gate run as a REAL micro-batch ingest stream — the
     production shape of ``dedup_bloom_ingest_prefilter``: the static gate
     state (packed Bloom + exact corpus shingle set) is built ONCE and
-    lineage-cut, then arriving documents stream through ``readStream`` +
-    ``foreachBatch`` in three mod-split micro-batch files; each batch's
-    per-document verdicts are computed by the SAME ``_bloom_verdicts``
-    core and written to the batch's own ``batch_id=N`` dir with OVERWRITE
-    (the exactly-once replay recipe the count-min sink established).
+    lineage-cut, then arriving documents are replayed through
+    ``foreachBatch`` (`streaming.replay`) in three mod-split micro-batch
+    files; each batch's per-document verdicts are computed by the SAME
+    ``_bloom_verdicts`` core and written to the batch's own
+    ``batch_id=N`` dir with OVERWRITE (the exactly-once replay recipe
+    the count-min sink established).
     The final frame is the union of the per-batch sinks.
 
     The oracle is the batch prefilter's SQL VERBATIM: per-document
@@ -1318,58 +1291,18 @@ def streaming_bloom_admit_equivalence(
     cost (one map pass over the batch's shingles + an 8 KiB broadcast
     join); the static state never rebuilds and nothing corpus-sized
     crosses a batch boundary or the driver."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..queries import cut_lineage
-    from ..streaming import clamped_shuffle as _clamped_shuffle
+    from ..streaming import replay
 
-    with _clamped_shuffle(spark):
-        bloom, corpus_g = _bloom_filter_frames(spark, sf_dir)
-        bloom = cut_lineage(bloom)
-        corpus_g = cut_lineage(corpus_g)
-        docs = t(spark, sf_dir, "documents")
-        arriving = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text")
-        root = _tempfile.mkdtemp(prefix="nqes_stream_bloom_")
-        try:
-            src_dir = _os.path.join(root, "arrivals")
-            for i in range(3):
-                d = _os.path.join(src_dir, f"b{i}")
-                arriving.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(d)
-                # deterministic FileStreamSource order (mod-time stamped);
-                # verdicts are per-doc so batching cannot matter anyway
-                for name in _os.listdir(d):
-                    _os.utime(
-                        _os.path.join(d, name), (1_700_000_000 + i * 10,) * 2
-                    )
-            sink_dir = _os.path.join(root, "verdicts")
-
-            def admit_sink(bdf, batch_id: int) -> None:
-                out = _bloom_verdicts(bdf, bloom, corpus_g)
-                # overwrite THIS batch's dir: a replayed batch after a
-                # checkpoint restart lands on the same path instead of
-                # double-appending (the cm_merge_sink recipe)
-                out.coalesce(1).write.mode("overwrite").parquet(
-                    _os.path.join(sink_dir, f"batch_id={batch_id}")
-                )
-
-            q = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(_os.path.join(src_dir, "b*"))
-                .writeStream.foreachBatch(admit_sink)
-                .option("checkpointLocation", _os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("bloom admit stream did not terminate")
-            out = spark.read.parquet(_os.path.join(sink_dir, "batch_id=*")).select(
-                "doc_id", "n_shingles", "n_maybe", "n_present", "n_false_pos", "novel_fast"
-            )
-            # materialize off the temp sink before `finally` removes it
-            return out.localCheckpoint(eager=True)
-        finally:
-            _shutil.rmtree(root, ignore_errors=True)
+    bloom, corpus_g = _bloom_filter_frames(spark, sf_dir)
+    bloom = cut_lineage(bloom)
+    corpus_g = cut_lineage(corpus_g)
+    docs = t(spark, sf_dir, "documents")
+    arriving = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text")
+    return replay(
+        spark,
+        [arriving.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+        lambda batch_df, _: _bloom_verdicts(batch_df, bloom, corpus_g),
+    ).select(
+        "doc_id", "n_shingles", "n_maybe", "n_present", "n_false_pos", "novel_fast"
+    )

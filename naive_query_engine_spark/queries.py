@@ -113,7 +113,9 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 def cut_lineage(df: DataFrame) -> DataFrame:
     """Lineage cut for iterative operators (pagerank / components /
-    triangles / the BPE trainer / the cosine blocked frame).
+    triangles / the BPE trainer / the cosine blocked frame), and for the
+    sink read back by ``streaming.replay``, which must outlive the
+    replay's temp directory.
 
     Default: ``localCheckpoint`` — EAGER (merely constructing the operator's
     DataFrame executes Spark jobs, including in plan-inspection paths) and
@@ -137,7 +139,9 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     recomputes every iteration inside one job, and for frames that
     reference a cut more than once plan ANALYSIS itself grows
     geometrically per iteration — the BPE trainer's counts (twice) —
-    never run results, or the plan-budget tests, under this flag.
+    never run results, or the plan-budget tests, under this flag.  A
+    replayed stream's frame then points at the removed temp directory:
+    ``explain`` it, never execute it.
     """
     import os
 

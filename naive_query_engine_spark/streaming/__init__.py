@@ -18,11 +18,13 @@ an in-memory sink (``tests/test_streaming.py``).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..queries import dec
+from ..queries import cut_lineage, dec
 
 
 class clamped_shuffle:
@@ -36,9 +38,8 @@ class clamped_shuffle:
     stream-stream join at sf0.01.  On a real cluster this knob is sized
     to key cardinality, not left at default; clamping inside the
     harness (and restoring after) models that without touching the
-    caller's session.  Lives here (not in one operator module) because
-    every streaming equivalence harness — events, sketches, future
-    families — uses it."""
+    caller's session.  :func:`replay` runs every streaming equivalence
+    query under it."""
 
     KEY = "spark.sql.shuffle.partitions"
 
@@ -53,6 +54,89 @@ class clamped_shuffle:
 
     def __exit__(self, *exc) -> None:
         self._spark.conf.set(self.KEY, self._prev)
+
+
+def replay(
+    spark: SparkSession,
+    batches: list[DataFrame],
+    per_batch: Callable[[DataFrame, int], DataFrame] = lambda batch_df, _: batch_df,
+    pipeline: Callable[[Callable[[], DataFrame]], DataFrame] = lambda source: source(),
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay ``batches`` through the Structured Streaming engine, one
+    micro-batch per frame, and return what the sink received: the one
+    harness behind every registered stream==batch query.
+
+    Each frame is written as one parquet file with a strictly increasing
+    mtime, so the file source (``maxFilesPerTrigger=1``, schema of the
+    first frame) reads them in list order, one per trigger.
+    ``pipeline(source)`` builds the streaming frame; ``source`` is a
+    zero-argument factory, so a pipeline may read the arrivals twice
+    (the stream-stream join).  The stream runs to completion
+    (``availableNow``) under :class:`clamped_shuffle`, and each
+    micro-batch's ``per_batch(batch_df, batch_id)`` frame (by default
+    the micro-batch itself) is written to ``<sink>/batch_id=N`` with
+    OVERWRITE: the exactly-once recipe of :func:`cm_merge_sink`, where a
+    batch re-delivered after a checkpoint restart rewrites its own
+    directory instead of appending twice.
+
+    Fails loudly if the stream does not terminate, or if the number of
+    micro-batches that read a file differs from ``len(batches)``;
+    watermark-driven no-data batches read none and do not count.
+    Returns the sink read back (``per_batch``'s columns plus the
+    ``batch_id`` partition column) through ``cut_lineage``, so it
+    outlives the temp directory, which is removed on every exit."""
+    import os
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix="nqes_replay_")
+    try:
+        src_dir = os.path.join(root, "arrivals")
+        for i, frame in enumerate(batches):
+            d = os.path.join(src_dir, f"b{i}")
+            frame.coalesce(1).write.parquet(d)
+            for name in os.listdir(d):
+                os.utime(os.path.join(d, name), (1_700_000_000 + i * 10,) * 2)
+
+        def source() -> DataFrame:
+            return (
+                spark.readStream.schema(batches[0].schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(os.path.join(src_dir, "b*"))
+            )
+
+        sink_dir = os.path.join(root, "sink")
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            per_batch(batch_df, batch_id).write.mode("overwrite").parquet(
+                os.path.join(sink_dir, f"batch_id={batch_id}")
+            )
+
+        with clamped_shuffle(spark):
+            q = (
+                pipeline(source)
+                .writeStream.foreachBatch(sink)
+                .outputMode(output_mode)
+                .option("checkpointLocation", os.path.join(root, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(600):
+                q.stop()
+                raise RuntimeError("replay stream did not terminate in 600 s")
+        n_read = sum(
+            any(s.startOffset != s.endOffset for s in p.sources)
+            for p in q.recentProgress
+        )
+        if n_read != len(batches):
+            raise RuntimeError(
+                f"replay expected {len(batches)} micro-batches, got {n_read}"
+            )
+        return cut_lineage(spark.read.parquet(sink_dir))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
 
 #: schema of the events corpus after nanos→micros normalization
 EVENTS_SCHEMA = (

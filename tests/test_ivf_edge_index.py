@@ -91,7 +91,9 @@ def test_table_matches_session_built_edges(spark, ivf_index):
 
 MAINT_TABLE = "b_ivf_maint_index"
 #: measured Spark jobs of one upsert_ivf_vector_index call on maint_index
-UPSERT_JOBS = 15
+UPSERT_JOBS = 14
+#: measured Spark jobs of one repair_ivf_vector_index call of two cells
+REPAIR_JOBS = 23
 
 
 def _vectors(spark, pred: str):
@@ -206,7 +208,8 @@ def test_upsert_job_ceiling_and_one_kernel_pass(spark, maint_index):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["n_arrivals"] > 0
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= UPSERT_JOBS
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= UPSERT_JOBS, n_jobs
     spark.catalog.refreshTable(f"{MAINT_TABLE}_assign")
     edges = cell_mutual_knn_edges(
         spark.table(f"{MAINT_TABLE}_assign").filter(
@@ -290,7 +293,9 @@ def test_repair_flagged_cells_partial_retrain(spark, maint_index):
     repaired region must equal a direct Lloyd recompute from the pooled
     members under the refreshed centroids, and the centroids table must
     carry the hybrid set — all without reading any unflagged partition
-    (partial retrain is O(pool))."""
+    (partial retrain is O(pool)).  The repair runs at most REPAIR_JOBS
+    Spark jobs: its pool and edge counts come from one grouped count
+    each."""
     from naive_query_engine_spark.operators.kmeans import (
         KMEANS_ITERS,
         _assign_to_cells,
@@ -330,8 +335,16 @@ def test_repair_flagged_cells_partial_retrain(spark, maint_index):
         for r in spark.table(f"{MAINT_TABLE}_centroids").collect()
     }
 
-    res = repair_ivf_vector_index(spark, MAINT_TABLE, repaired)
+    sc = spark.sparkContext
+    group = "ivf-repair-jobs"
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        res = repair_ivf_vector_index(spark, MAINT_TABLE, repaired)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["n_members"] == len(pool_rows) > 0
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= REPAIR_JOBS, n_jobs
 
     spark.catalog.refreshTable(MAINT_TABLE)
     spark.catalog.refreshTable(f"{MAINT_TABLE}_assign")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from naive_query_engine_spark.operators.kmeans import (
     _UPSERT_TRAIN_PRED,
     GROWK_CELL_TARGET,
-    _growk_assignment,
+    _frozen_assignment,
 )
 from naive_query_engine_spark.queries import QUERIES, t
 
@@ -33,7 +33,7 @@ def test_growk_quantizer_k_tracks_corpus_count(spark):
     add), is > 1 at the test SFs (a non-degenerate inverted file), and
     mean occupancy ~= GROWK_CELL_TARGET by construction."""
     for sf in (SF_SMOKE, SF_ORACLE):
-        assign, centroids = _growk_assignment(spark, sf)
+        assign, centroids = _frozen_assignment(spark, sf, growk=True)
         n_base = (
             t(spark, sf, "embeddings").filter(F.expr(_UPSERT_TRAIN_PRED)).count()
         )
@@ -106,13 +106,8 @@ def test_exact_twin_flagged_under_fixed_and_grow_k(spark):
     for k in (KMEANS_K, -(-n // GROWK_CELL_TARGET)):
         cents = train_centroids(qt.select("vec_id", "q"), k, KMEANS_ITERS)
         corpus = _assign_to_cells(qt, cents)
-        probe = _assign_to_cells(planted, cents).select(
-            F.col("vec_id").alias("arrival_id"),
-            F.col("q").alias("qq"),
-            F.col("nrm2").alias("qn2"),
-            "cell",
-        )
-        v = _admit_verdicts(probe, corpus, 0.99).collect()
+        arrivals = _assign_to_cells(planted, cents)
+        v = _admit_verdicts(arrivals, corpus, 0.99).collect()
         assert len(v) == 1
         assert v[0]["is_duplicate"], k
         assert v[0]["dup_of"] == src["vec_id"], k
@@ -156,13 +151,13 @@ def test_admit_verdicts_matches_python_model(
     cdf = spark.createDataFrame(
         crows, "vec_id long, q array<long>, nrm2 long, cell long"
     )
-    probe = spark.createDataFrame(
-        brows, "arrival_id long, qq array<long>, qn2 long, cell long"
+    arrivals = spark.createDataFrame(
+        brows, "vec_id long, q array<long>, nrm2 long, cell long"
     )
     got = {
         r["vec_id"]: (r["is_duplicate"], r["dup_of"], r["best_cosine"])
         for r in _admit_verdicts(
-            probe, cdf, tau, intra_batch=with_peers
+            arrivals, cdf, tau, intra_batch=with_peers
         ).collect()
     }
 

@@ -10,7 +10,9 @@ from __future__ import annotations
 import pytest
 
 from naive_query_engine_spark.operators.clustering import connected_components
-from naive_query_engine_spark.queries import cut_lineage
+from naive_query_engine_spark.queries import QUERIES, cut_lineage
+
+from .conftest import SF_SMOKE
 
 
 def test_reliable_branch_requires_dir_then_checkpoints_to_it(
@@ -34,6 +36,24 @@ def test_reliable_branch_requires_dir_then_checkpoints_to_it(
     edges = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], "a long, b long")
     comp = {r.id: r.component for r in connected_components(vertices, edges).collect()}
     assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+
+
+def test_stream_replay_cuts_through_reliable_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """A streaming equivalence query's read-back goes through
+    ``cut_lineage``, so the reliable branch covers it too: the configured
+    checkpoint dir receives the cut's files, and the rows equal the
+    default (local-cut) run's."""
+    fn = QUERIES["streaming_countmin_sink_equivalence"].fn
+    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    want = sorted(tuple(r) for r in fn(spark, SF_SMOKE).collect())
+
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    got = sorted(tuple(r) for r in fn(spark, SF_SMOKE).collect())
+    assert [p for p in tmp_path.rglob("*") if p.is_file()]
+    assert got == want and got
 
 
 def test_default_branch_stays_local(spark, monkeypatch):

@@ -1018,3 +1018,85 @@ def test_stream_maintain_ivf_index_admit_then_index(spark, tmp_path):
         for tbl in (seq_table, stream_table):
             for suffix in ("", "_assign", "_centroids", "_conf"):
                 spark.sql(f"DROP TABLE IF EXISTS {tbl}{suffix}")
+
+
+# ---------------------------------------------------------------------------
+# streaming.replay: the one harness behind the stream==batch queries
+
+
+def _replay_dirs(root):
+    return sorted(root.glob("nqes_replay_*"))
+
+
+def test_replay_one_micro_batch_per_frame_then_removes_its_dir(
+    spark, tmp_path, monkeypatch
+):
+    """Three frames → three micro-batches in list order: each frame's
+    rows reach ``per_batch`` under its own batch id and come back with
+    that ``batch_id``; the temp dir exists during the stream and is gone
+    after the return."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    batches = [
+        spark.createDataFrame([(i, 10 * i + j) for j in range(i + 1)], "b long, x long")
+        for i in range(3)
+    ]
+    seen = []
+
+    def per_batch(batch_df, batch_id):
+        seen.append(batch_id)
+        assert _replay_dirs(tmp_path)
+        return batch_df.withColumn("seen", F.lit(batch_id).cast("long"))
+
+    got = st.replay(spark, batches, per_batch)
+    assert sorted(tuple(r) for r in got.select("b", "x", "seen", "batch_id").collect()) == [
+        (i, 10 * i + j, i, i) for i in range(3) for j in range(i + 1)
+    ]
+    assert seen == [0, 1, 2]
+    assert not _replay_dirs(tmp_path)
+
+
+def test_replay_removes_its_dir_when_per_batch_raises(spark, tmp_path, monkeypatch):
+    """A failing ``per_batch`` fails the replay; the temp dir is removed
+    and the session's shuffle-partition count is restored."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def per_batch(batch_df, batch_id):
+        assert _replay_dirs(tmp_path)
+        raise ValueError("per_batch failed on purpose")
+
+    with pytest.raises(Exception, match="per_batch failed on purpose"):
+        st.replay(spark, [spark.range(3)], per_batch)
+    assert not _replay_dirs(tmp_path)
+    assert spark.conf.get(key) == before
+
+
+def test_replay_does_not_count_no_data_batches(spark):
+    """A watermarked aggregation closes its windows in a no-data batch
+    after the last file: ``per_batch`` sees more batch ids than there are
+    frames, yet the replay's one-batch-per-frame check passes."""
+    batches = [
+        spark.createDataFrame(
+            [(f"2024-01-01 0{h}:10:00", 1)], "ts string, v long"
+        ).select(F.col("ts").cast("timestamp").alias("ts"), "v")
+        for h in (0, 5)
+    ]
+    seen = []
+
+    def per_batch(batch_df, batch_id):
+        seen.append(batch_id)
+        return batch_df
+
+    got = st.replay(
+        spark,
+        batches,
+        per_batch,
+        pipeline=lambda source: source()
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.sum("v").alias("v"))
+        .select(F.col("w.start").alias("start"), "v"),
+    )
+    assert len(seen) > len(batches)
+    assert [tuple(r) for r in got.select("v").collect()] == [(1,)]
